@@ -308,12 +308,14 @@ def run_incremental_jdbc(
         if batch is None:
             break
         batch = batch.cache()
-        hi = int(batch.agg(F.max("id")).collect()[0][0])
-        jobs = compile_jobs(batch)
-        job_store.append(jobs.select(*_job_cols()))
-        executed = execute_jobs(spark, jobs, src_root, dest_root)
-        job_store.append(executed.select(*_job_cols()))
-        batch.unpersist()
+        try:
+            hi = int(batch.agg(F.max("id")).collect()[0][0])
+            jobs = compile_jobs(batch)
+            job_store.append(jobs.select(*_job_cols()))
+            executed = execute_jobs(spark, jobs, src_root, dest_root)
+            job_store.append(executed.select(*_job_cols()))
+        finally:
+            batch.unpersist()  # a batch that raises must not leak it
         last_id = hi
         kv.set(LAST_PERSISTED_ID, str(last_id))
         batches += 1

@@ -174,9 +174,8 @@ def execute_sync(
             deletes.rdd.mapPartitions(run), results.schema
         )
         results = results.union(del_results)
-    out = results.cache()
-    out.count()  # side-effecting stage: materialize exactly once
-    return out
+    # side-effecting stage: run once, with no lineage left to re-run
+    return results.localCheckpoint(eager=True)
 
 
 def sync_directories(

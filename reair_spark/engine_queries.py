@@ -2969,6 +2969,18 @@ def zonemap_change_feed(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+def apply_change_rows(current: DataFrame, changes: DataFrame,
+                      cols: list[str]) -> DataFrame:
+    """``current ⊎ inserts − deletes`` over a change feed's rows.
+
+    Inserts join before deletes subtract: a row inserted and then
+    deleted inside one feed is in both sets but not in ``current``, so
+    subtracting first would bring it back."""
+    ins = changes.where("_change_type = 'insert'").select(*cols)
+    dels = changes.where("_change_type = 'delete'").select(*cols)
+    return current.select(*cols).unionByName(ins).exceptAll(dels)
+
+
 def cdf_incremental_sync(spark: SparkSession, sf: str) -> DataFrame:
     """Change-feed-DRIVEN replication (the composition that makes the
     CDF load-bearing, the Delta-CDF→downstream-sync shape): a dest
@@ -3048,12 +3060,10 @@ def cdf_incremental_sync(spark: SparkSession, sf: str) -> DataFrame:
                ch.select(F.col("bucket").cast("string"))
                .distinct().collect()]
     dest_cur, _ = zonemap_scan(spark, dest, buckets=buckets)
-    dels = ch.where("_change_type = 'delete'").select(*cols)
-    ins = ch.where("_change_type = 'insert'").select(*cols)
     # no caller-side checkpoint: zonemap_replace_buckets eagerly
     # checkpoints its input itself (the commit pin), so one here was
     # a second materialization of the same frame (r14)
-    new_view = dest_cur.select(*cols).exceptAll(dels).unionByName(ins)
+    new_view = apply_change_rows(dest_cur, ch, cols)
     rb = zonemap_replace_buckets(spark, dest, new_view, buckets)
     # verification: dest is now multiset-identical to the source
     s_now, _ = zonemap_scan(spark, src)

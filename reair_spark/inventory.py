@@ -187,7 +187,10 @@ def list_files(
             balanced = dirs.repartition(min(parallelism, 64))
         first = False
         listed = balanced.rdd.mapPartitions(scan_level)
-        level = spark.createDataFrame(listed, _SCAN_SCHEMA).cache()
+        # lazy: the count below lists the level once and cuts its lineage
+        level = spark.createDataFrame(listed, _SCAN_SCHEMA).localCheckpoint(
+            eager=False
+        )
         level_files = level.filter(F.col("kind") == "f").select(
             "root",
             F.col("path").alias("rel_path"),
@@ -200,7 +203,7 @@ def list_files(
         # hidden directories are pruned entirely (reference skips them)
         if not include_hidden:
             next_dirs = next_dirs.filter(~F.col("is_hidden"))
-        n = next_dirs.count()  # materializes `level` (cached)
+        n = next_dirs.count()  # materializes `level` (checkpointed)
         if n == 0:
             break
         dirs = next_dirs.select("root", F.col("path").alias("dir"))

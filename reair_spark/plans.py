@@ -247,10 +247,7 @@ def compact_plan(
     # Fallback: a file bigger than the target spans several windows and
     # skips ids. binned feeds BOTH the distinct-bins build and the
     # final join's stream side — materialize ahead of the fork.
-    from pyspark import StorageLevel
-
-    binned = binned.persist(StorageLevel.MEMORY_AND_DISK)
-    binned.count()
+    binned = binned.localCheckpoint(eager=True)
     bins = binned.select(dir_col, "bin").distinct()
     wd = W.partitionBy(dir_col).orderBy("bin")
     ranked = bins.withColumn(

@@ -283,14 +283,13 @@ def _replicate_warehouse(
     ).limit(1).count() > 0
     if has_copies:
         tasks = plan_copy_tasks(plan, inv)
+        # side-effecting stage: the eager local checkpoint runs the
+        # copies exactly once, here, so data lands BEFORE metadata
+        # commits (ST6) and later reads have no lineage to re-run
         copy_results = metrics.observe(
             execute_copies(spark, tasks, verify_checksum=verify_checksum),
             "copy",
-        ).cache()
-        # side-effecting stage: materialize exactly once (cache +
-        # count) so (a) data lands BEFORE metadata commits (ST6
-        # ordering) and (b) later actions never re-run the copies
-        copy_results.count()
+        ).localCheckpoint(eager=True)
     else:
         from reair_spark.copy import COPY_RESULT_SCHEMA
 
@@ -314,8 +313,10 @@ def _replicate_warehouse(
         if dest_catalog is not None
         else execute_commits(spark, plan, dest_root)
     )
-    commit_results = metrics.observe(committed, "commit").cache()
-    commit_results.count()
+    # same pin as the copies: the commits run exactly once, here
+    commit_results = metrics.observe(committed, "commit").localCheckpoint(
+        eager=True
+    )
     metrics.mark_done("commit")
 
     _jd(None)

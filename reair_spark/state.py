@@ -274,18 +274,20 @@ class JobStore:
         snap = self.current()
         if not keep_terminal:
             snap = snap.filter(~F.col("status").isin(*TERMINAL_STATES))
-        snap = snap.cache()
-        n = snap.count()
-        if n == 0:
-            # nothing to keep: an absent log IS the empty store
-            snap.unpersist()
-            shutil.rmtree(self.path, ignore_errors=True)
-            return 0
         tmp = f"{self.path}.__compacting"
         old = f"{self.path}.__old"
-        shutil.rmtree(tmp, ignore_errors=True)
-        snap.write.mode("overwrite").parquet(tmp)
-        snap.unpersist()
+        snap = snap.cache()
+        try:
+            n = snap.count()
+            if n:
+                shutil.rmtree(tmp, ignore_errors=True)
+                snap.write.mode("overwrite").parquet(tmp)
+        finally:
+            snap.unpersist()
+        if n == 0:
+            # nothing to keep: an absent log IS the empty store
+            shutil.rmtree(self.path, ignore_errors=True)
+            return 0
         shutil.rmtree(old, ignore_errors=True)
         os.replace(self.path, old)
         os.replace(tmp, self.path)

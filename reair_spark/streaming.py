@@ -45,13 +45,22 @@ def _memo_stream_df(spark: SparkSession, sf_dir: str, key: str, build):
     re-lists the source and recomputes from the parquet input, so this
     caches plan CONSTRUCTION (a few hundred py4j round-trips per gate
     call, ~0.2-0.45 s measured on the sessionize shape) and never data,
-    offsets, or results (r14, guide §1.2). Keyed by applicationId like
-    every template memo in this engine; all cached gates read only the
-    immutable bench inputs."""
-    k = (spark.sparkContext.applicationId, sf_dir, key)
+    offsets, or results (r14, guide §1.2). All cached gates read only
+    the immutable bench inputs; a ``build`` that captures a file's
+    schema at first call keeps it for the life of the entry.
+
+    Keyed by session, not just applicationId: a plan is bound to the
+    session that built it (its conf pinning and memory-sink
+    registration), so a sibling ``newSession()`` builds its own. An
+    insert drops every entry of a stopped SparkContext, whose plans pin
+    py4j references to a dead JVM."""
+    app = spark.sparkContext.applicationId
+    k = (app, spark._jsparkSession.sessionUUID(), sf_dir, key)
     df = _STREAM_DF_CACHE.get(k)
     if df is None:
         df = build()
+        for stale in [e for e in _STREAM_DF_CACHE if e[0] != app]:
+            del _STREAM_DF_CACHE[stale]
         _STREAM_DF_CACHE[k] = df
     return df
 
@@ -576,10 +585,12 @@ def stream_replicate(
         # persist, execute's collect, terminal persist) — same
         # race-free lazy-persist discipline as run_incremental
         jobs = compile_jobs(batch_df).persist()
-        job_store.append(jobs.select(*_job_cols()))
-        executed = execute_jobs(spark, jobs, src_root, dest_root)
-        job_store.append(executed.select(*_job_cols()))
-        jobs.unpersist()
+        try:
+            job_store.append(jobs.select(*_job_cols()))
+            executed = execute_jobs(spark, jobs, src_root, dest_root)
+            job_store.append(executed.select(*_job_cols()))
+        finally:
+            jobs.unpersist()  # a batch that raises must not leak it
 
     q = (
         events_stream.writeStream.foreachBatch(sink)

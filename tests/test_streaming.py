@@ -48,7 +48,8 @@ def test_stream_plan_memo_reuses_plan_not_results(spark, sf_dir):
     from reair_spark import streaming as S
 
     r1 = sorted(map(tuple, stream_sessionize(spark, sf_dir).collect()))
-    key = (spark.sparkContext.applicationId, sf_dir, "sessionize:30 minutes")
+    key = (spark.sparkContext.applicationId,
+           spark._jsparkSession.sessionUUID(), sf_dir, "sessionize:30 minutes")
     assert key in S._STREAM_DF_CACHE
     cached = S._STREAM_DF_CACHE[key]
     r2 = sorted(map(tuple, stream_sessionize(spark, sf_dir).collect()))
@@ -56,6 +57,41 @@ def test_stream_plan_memo_reuses_plan_not_results(spark, sf_dir):
     assert r1 == r2 and len(r1) > 0
     # the cached object is the bounded STREAMING plan, not a result
     assert cached.isStreaming
+
+
+def test_stream_plan_memo_drops_stopped_contexts(spark):
+    """An insert evicts every entry whose applicationId is not the live
+    context's: a stopped context's plans pin a dead JVM."""
+    from reair_spark import streaming as S
+
+    stale = ("app-stopped", "session", "sf", "probe")
+    S._STREAM_DF_CACHE[stale] = object()
+    try:
+        built = S._memo_stream_df(spark, "sf", "probe", object)
+        assert stale not in S._STREAM_DF_CACHE
+        assert S._memo_stream_df(spark, "sf", "probe", object) is built
+    finally:
+        for k in [k for k in S._STREAM_DF_CACHE if k[-1] == "probe"]:
+            del S._STREAM_DF_CACHE[k]
+
+
+def test_stream_plan_memo_is_per_session(spark):
+    """A sibling newSession() builds its own plan, bound to itself; the
+    first session's entry is untouched."""
+    from reair_spark import streaming as S
+
+    sib = spark.newSession()
+    try:
+        mine = S._memo_stream_df(spark, "sf", "probe", lambda: spark.range(1))
+        theirs = S._memo_stream_df(sib, "sf", "probe", lambda: sib.range(1))
+        assert theirs is not mine
+        assert (theirs.sparkSession._jsparkSession.sessionUUID()
+                == sib._jsparkSession.sessionUUID())
+        assert S._memo_stream_df(spark, "sf", "probe", object) is mine
+        assert S._memo_stream_df(sib, "sf", "probe", object) is theirs
+    finally:
+        for k in [k for k in S._STREAM_DF_CACHE if k[-1] == "probe"]:
+            del S._STREAM_DF_CACHE[k]
 
 
 def test_foreachbatch_compile_is_checkpointed(spark, tmp_path):

@@ -72,6 +72,32 @@ def test_change_feed_reconstructs_snapshots(spark, history):
     assert target.exceptAll(rebuilt).count() == 0
 
 
+def test_apply_change_rows_insert_then_delete(spark, tmp_path):
+    """A row inserted and then deleted inside one feed stays deleted:
+    the apply adds the inserts before it subtracts the deletes
+    (subtracting first brought ids 100..109 back)."""
+    from reair_spark.engine_queries import apply_change_rows
+
+    loc = str(tmp_path / "t")
+    S.write_zonemapped(_mk(spark, 0, 100), loc, "b", ["id", "v"])
+    S.append_zonemapped(_mk(spark, 100, 150), loc, "b", ["id", "v"],
+                        ingest_id=1)
+    S.zonemap_delete(spark, loc, predicates=[("v", 200, 219)], mode="mor")
+    ch, _ = S.zonemap_changes(spark, loc, from_ingest=0)
+    cols = ["id", "b", "v"]
+    ins = ch.where("_change_type = 'insert'").select(*cols)
+    dels = ch.where("_change_type = 'delete'").select(*cols)
+    assert sorted(r.id for r in ins.intersect(dels).collect()) == list(
+        range(100, 110))
+    base, _ = S.zonemap_scan(spark, loc, max_ingest=0)
+    got = apply_change_rows(base, ch, cols)
+    target, _ = S.zonemap_scan(spark, loc)
+    target = target.select(*cols)
+    assert got.count() == 140
+    assert got.exceptAll(target).count() == 0
+    assert target.exceptAll(got).count() == 0
+
+
 def test_change_feed_bounded_range_and_empty(spark, history):
     ch, st = S.zonemap_changes(spark, history, from_ingest=1,
                                to_ingest=2)
