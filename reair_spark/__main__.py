@@ -192,28 +192,13 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "incremental":
         from reair_spark.events import run_incremental
 
-        if args.events_parquet.startswith("jdbc:"):
-            from reair_spark.auditlog import JdbcAuditLogSource, run_incremental_jdbc
-
-            props = {"driver": args.jdbc_driver} if args.jdbc_driver else {}
-            source = JdbcAuditLogSource(
-                args.events_parquet, properties=props, batch_size=args.batch_size
-            )
-            res = run_incremental_jdbc(
-                spark, source, args.src_root, args.dest_root, args.state_dir,
-                max_batches=args.max_batches,
-                start_after_id=args.start_after_id,
-            )
-            print(json.dumps({
-                "last_id": res["last_id"], "batches": res["batches"],
-                "jobs": res["job_status_counts"],
-                "lag_seconds": round(res["lag_seconds"], 1),
-            }))
-            return 1 if res["job_status_counts"].get("FAILED") else 0
-
+        jdbc = args.events_parquet.startswith("jdbc:")
         if args.streaming:
             from reair_spark.streaming import stream_replicate
 
+            if jdbc:
+                p.error("--streaming reads a parquet events dir; a jdbc: "
+                        "audit tail runs in the polling loop")
             if args.start_after_id is not None:
                 # The streaming source tracks position via the Structured
                 # Streaming checkpoint, not LAST_PERSISTED_ID — silently
@@ -239,7 +224,13 @@ def main(argv: list[str] | None = None) -> int:
             print(json.dumps({"mode": "streaming", "status": "drained"}))
             return 0
 
-        events = spark.read.parquet(args.events_parquet)
+        if jdbc:
+            from reair_spark.auditlog import JdbcAuditLogSource
+
+            props = {"driver": args.jdbc_driver} if args.jdbc_driver else {}
+            events = JdbcAuditLogSource(args.events_parquet, properties=props)
+        else:
+            events = spark.read.parquet(args.events_parquet)
         res = run_incremental(
             spark, events, args.src_root, args.dest_root, args.state_dir,
             batch_size=args.batch_size, max_batches=args.max_batches,

@@ -13,6 +13,15 @@ over ``spark.read.jdbc`` and emits the engine's flattened event frame
 ``events.compile_jobs`` consumes a JDBC tail and a parquet/Kafka table
 identically.
 
+The source is a reader, not a loop: ``events.run_incremental`` polls it
+exactly as it polls a static events table (the reference's layering —
+AuditLogReader feeding ReplicationServer.java:348-506), so the
+checkpoint, pause flag, restart re-queue, page size and DB watchdog are
+the loop's, shared by both sources::
+
+    run_incremental(spark, JdbcAuditLogSource(url, properties=props),
+                    src_root, dest_root, state_dir, batch_size=200)
+
 Uncommitted-id guard: MySQL auto-increment ids can become visible out
 of order (a transaction holding id=100 may commit after id=101 is
 already readable), so a reader that advances its checkpoint past a gap
@@ -39,14 +48,11 @@ cursors over id strides) — the standard Spark JDBC split.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # AuditLogReader.java:202-204 — command types that never replicate
 SKIPPED_COMMANDS = ("SHOWTABLES", "SHOWPARTITIONS", "SWITCHDATABASE")
-DEFAULT_BATCH = 200  # AuditLogReader.java:41 fetch size
 
 
 class JdbcAuditLogSource:
@@ -60,7 +66,6 @@ class JdbcAuditLogSource:
         properties: dict | None = None,
         audit_table: str = "audit_log",
         objects_table: str = "audit_objects",
-        batch_size: int = DEFAULT_BATCH,
         ident_quote: str = '"',
         stability_retries: int = 2,
     ):
@@ -68,7 +73,6 @@ class JdbcAuditLogSource:
         self.properties = properties or {}
         self.audit_table = audit_table
         self.objects_table = objects_table
-        self.batch_size = batch_size
         self.q = ident_quote
         self.stability_retries = stability_retries
 
@@ -135,23 +139,28 @@ class JdbcAuditLogSource:
             .select("id", "create_time", "command_type", "command", "objects")
         )
 
-    def read_batch(self, spark: SparkSession, last_id: int) -> DataFrame | None:
-        """One id-ordered micro-batch after ``last_id``; None when the
-        tail is drained. Applies the uncommitted-id re-read guard (see
-        module docstring).
+    def read_batch(
+        self, spark: SparkSession, last_id: int, batch_size: int
+    ) -> tuple[DataFrame, list[int]] | None:
+        """One id-ordered page of at most ``batch_size`` entries after
+        ``last_id``, as ``(batch, ids)``; None when the tail is
+        drained. Applies the uncommitted-id re-read guard (see module
+        docstring).
 
-        The batch is snapshotted with ONE query execution (a JDBC
+        The entries are snapshotted with ONE query execution (a JDBC
         DataFrame re-runs its query per action, so acting on it twice
         could see two different database states — the exact hazard the
-        guard exists to detect); it is bounded by ``batch_size``, so
-        the driver-side collect is a few hundred metadata rows."""
+        guard exists to detect); the page is bounded by ``batch_size``,
+        so the driver-side collect is a few hundred metadata rows, and
+        the ids it returns cost the loop no further job."""
         for _ in range(max(1, self.stability_retries)):
             rows = self._jdbc(
-                spark, self._entries_sql(last_id, self.batch_size)
+                spark, self._entries_sql(last_id, batch_size)
             ).collect()
             if not rows:
                 return None
-            hi = max(int(r["id"]) for r in rows)
+            ids = [int(r["id"]) for r in rows]
+            hi = max(ids)
             if self._count_between(spark, last_id, hi) == len(rows):
                 break
             # a lower-id row committed between the two reads: re-fetch
@@ -162,7 +171,7 @@ class JdbcAuditLogSource:
             rows,
             "id long, create_time timestamp, command_type string, command string",
         )
-        return self._attach_objects(spark, entries, last_id, hi)
+        return self._attach_objects(spark, entries, last_id, hi), ids
 
     def read_range(
         self, spark: SparkSession, lo: int, hi: int, num_partitions: int = 8
@@ -227,103 +236,9 @@ def write_events_to_jdbc(
 
 class DbWatchdogExpired(RuntimeError):
     """Raised when the audit-DB has been unreachable longer than the
-    watchdog limit — the loop gives up so a supervisor can restart the
-    process with a fresh driver/connection state (the reference's
-    DbConnectionWatchdog db/DbConnectionWatchdog.java:38-63 runs a
-    SELECT-1 probe thread and System.exit(-1)s on the same condition;
-    a raise is the library-shaped equivalent of killing the server)."""
-
-
-def run_incremental_jdbc(
-    spark: SparkSession,
-    source: JdbcAuditLogSource,
-    src_root: str,
-    dest_root: str,
-    state_dir: str,
-    max_batches: int | None = None,
-    start_after_id: int | None = None,
-    watchdog_limit_s: float = 10.0,
-    watchdog_retry_s: float = 0.5,
-) -> dict:
-    """The ReplicationServer.run loop (ST1-ST4) fed by the JDBC tail:
-    resume from checkpoint, poll id-ordered batches, compile, persist
-    job state, execute, advance checkpoint. Identical semantics to
-    events.run_incremental over a static table — only the source
-    differs, which is the reference's own layering
-    (AuditLogReader feeding ReplicationServer.java:348-506).
-
-    ``start_after_id``: operator override after a bad deploy
-    (ReplicationLauncher.java:276-279) — abort persisted in-flight
-    jobs (ABORTED, never re-executed) and force the resume point."""
-    from reair_spark.events import (
-        LAST_PERSISTED_ID,
-        _job_cols,
-        abort_inflight,
-        compile_jobs,
-        execute_jobs,
-    )
-    from reair_spark.state import JobStore, KeyValueStore
-
-    kv = KeyValueStore(f"{state_dir}/key_value.json")
-    job_store = JobStore(spark, f"{state_dir}/replication_jobs")
-
-    if start_after_id is not None:
-        abort_inflight(job_store)
-        last_id = int(start_after_id)
-        kv.set(LAST_PERSISTED_ID, str(last_id))
-    else:
-        pending = job_store.incomplete()
-        if pending.count() > 0:
-            executed = execute_jobs(spark, pending, src_root, dest_root)
-            job_store.append(executed.select(*_job_cols()))
-        last_id = int(kv.get(LAST_PERSISTED_ID, "0") or 0)
-    batches = 0
-    first_fail: float | None = None  # start of current failure streak
-    while max_batches is None or batches < max_batches:
-        # DB watchdog: transient tail-read failures retry with a short
-        # sleep; a CONSECUTIVE failure streak longer than
-        # watchdog_limit_s raises so the supervisor restarts the
-        # process (checkpointed state makes the restart a no-op
-        # replay). The clock starts at the first failure of the
-        # streak — not at the last success — so a batch whose
-        # compile/execute takes longer than the limit doesn't turn a
-        # single transient error into an instant kill (the reference
-        # DbConnectionWatchdog times consecutive probe failures the
-        # same way). Job state writes are NOT guarded — losing the
-        # state store is a real failure, not a blip.
-        try:
-            batch = source.read_batch(spark, last_id)
-        except Exception as ex:  # noqa: BLE001 — any JDBC/driver error
-            now = time.monotonic()
-            if first_fail is None:
-                first_fail = now
-            if now - first_fail > watchdog_limit_s:
-                raise DbWatchdogExpired(
-                    f"audit DB unreachable for > {watchdog_limit_s}s "
-                    f"(last error: {type(ex).__name__}: {ex})"
-                ) from ex
-            time.sleep(watchdog_retry_s)
-            continue
-        first_fail = None
-        if batch is None:
-            break
-        batch = batch.cache()
-        try:
-            hi = int(batch.agg(F.max("id")).collect()[0][0])
-            jobs = compile_jobs(batch)
-            job_store.append(jobs.select(*_job_cols()))
-            executed = execute_jobs(spark, jobs, src_root, dest_root)
-            job_store.append(executed.select(*_job_cols()))
-        finally:
-            batch.unpersist()  # a batch that raises must not leak it
-        last_id = hi
-        kv.set(LAST_PERSISTED_ID, str(last_id))
-        batches += 1
-    status_counts, lag = job_store.status_summary()  # one log pass
-    return {
-        "last_id": last_id,
-        "batches": batches,
-        "job_store": job_store,
-        "job_status_counts": status_counts,
-        "lag_seconds": lag,
-    }
+    watchdog limit — ``events.run_incremental`` gives up so a
+    supervisor can restart the process with a fresh driver/connection
+    state (the reference's DbConnectionWatchdog
+    db/DbConnectionWatchdog.java:38-63 runs a SELECT-1 probe thread and
+    System.exit(-1)s on the same condition; a raise is the
+    library-shaped equivalent of killing the server)."""

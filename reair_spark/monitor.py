@@ -16,9 +16,13 @@ of Thrift structs, same data:
     POST /resume        → clears it
 
 pause/resume are REAL, not lifecycle stubs: `events.run_incremental`
-checks the flag each batch, so pausing through this endpoint stops a
-running loop at the next batch boundary — the same semantics the
-Thrift service's pause gives the reference's copy workers.
+checks the flag each batch, whatever source it polls (a static events
+table or the JDBC audit tail), so pausing through this endpoint stops
+a running loop at the next batch boundary — the same semantics the
+Thrift service's pause gives the reference's copy workers. The
+`--streaming` mode (`streaming.stream_replicate`) does not read the
+flag: its position lives in the Structured Streaming checkpoint, not
+the state KV, so it is stopped by stopping the query.
 
 Everything reads the JobStore transition log on request (no engine
 attachment), so the server can inspect a crashed deployment — the

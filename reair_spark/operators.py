@@ -531,7 +531,11 @@ def chunked_running_sum(
     expensive relative to its output — e.g. tokenizing terabytes of
     text down to a (doc_id, lang, n_tok) projection: the cache is
     orders of magnitude smaller than the input and the tokenize pass
-    runs once. The ContextCleaner unpersists when the plan is GC'd.
+    runs once. The persisted input is NOT released by this function:
+    a DataFrame ``persist`` registers the plan with Spark's
+    CacheManager, which holds it until ``unpersist`` (or
+    ``spark.catalog.clearCache()``), so the ContextCleaner never frees
+    it, however unreachable the returned frame becomes.
 
     Pass ``materialize=False`` when the projection is roughly the SAME
     size as its source (e.g. a file inventory that is already narrow):

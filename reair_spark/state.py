@@ -101,25 +101,19 @@ class JobStore:
         shutil.rmtree(tmp, ignore_errors=True)
         shutil.rmtree(old, ignore_errors=True)
 
-    def append(self, jobs: DataFrame) -> None:
-        self._seq += 1
-        jobs = jobs.withColumn("seq", F.lit(self._seq).cast("long"))
-        if "create_time" not in jobs.columns:
-            jobs = jobs.withColumn("create_time", F.current_timestamp())
-        jobs.write.mode("append").parquet(self.path)
-
     def append_rows(self, rows: list) -> None:
-        """Driver-side micro-append for already-collected row sets.
+        """Append one set of transitions — the log's only writer.
 
         The transition log's appends are metadata-scale by
-        construction (≤ one audit batch of jobs), so a full Spark job
-        + parquet commit protocol per append is pure scheduling floor
-        — two of the ~20 jobs in the incremental e2e profile (VERDICT
-        r12 ask #4). One pyarrow file write lands the same columns in
-        the same directory, readable by every existing consumer
+        construction (≤ one audit batch of jobs), so a Spark job +
+        parquet commit protocol per append would be pure scheduling
+        floor (VERDICT r12 ask #4). One driver-side pyarrow file per
+        call lands the JOB_SCHEMA columns, readable by every consumer
         (current / incomplete / status_summary / compact). ``rows``
-        may be pyspark Rows or plain dicts; a missing ``create_time``
-        is stamped here exactly as :meth:`append` stamps it."""
+        may be pyspark Rows or plain dicts; absent columns are null,
+        ``seq`` is this call's sequence number and a missing
+        ``create_time`` is stamped now. An empty ``rows`` writes
+        nothing."""
         import datetime as _dt
         import uuid
 
@@ -167,6 +161,10 @@ class JobStore:
             table,
             os.path.join(self.path, f"part-{uuid.uuid4().hex}.parquet"),
         )
+
+    # the same writer under its older name: replbench/trace.py wraps
+    # both names to time the state layer
+    append = append_rows
 
     def current(self) -> DataFrame:
         """Latest transition per job_id."""

@@ -563,34 +563,28 @@ def stream_replicate(
     checkpoint_dir: str,
 ) -> None:
     """The full incremental replication loop AS a Structured Streaming
-    query: each micro-batch compiles audit events to jobs, persists the
-    PENDING transitions, executes targeted replication, and persists
-    the terminal transitions (ST1-ST7 end-to-end).
+    query: each micro-batch runs the same batch step as the polled loop
+    (``events.replicate_batch``: compile, persist the PENDING
+    transitions, execute targeted replication, persist the terminal
+    transitions — ST1-ST7 end-to-end).
 
     Delivery semantics: the checkpoint gives at-least-once batch
-    delivery; `execute_jobs` is idempotent (targeted replication
-    re-reads the current src object and the JobStore is append-only
+    delivery; the step is idempotent (targeted replication re-reads
+    the current src object and the JobStore is append-only
     last-writer-wins), so a replayed batch converges to the same dest
     state — the same exactly-once-ish contract the reference builds by
     hand (ReplicationServer.restoreReplicationJob:240-328). On a real
     bus this is `readStream.format("kafka")` + `trigger(processingTime=
-    ...)` with NO code change in the sink."""
-    from reair_spark.events import _job_cols, compile_jobs, execute_jobs
+    ...)` with NO code change in the sink. The stream's position lives
+    in its checkpoint, not the state KV, so the monitor's pause flag
+    and ``--start-after-id`` do not apply here."""
+    from reair_spark.events import replicate_batch
     from reair_spark.state import JobStore
 
     job_store = JobStore(spark, f"{state_dir}/replication_jobs")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # one computation, three sequential consumers (pending
-        # persist, execute's collect, terminal persist) — same
-        # race-free lazy-persist discipline as run_incremental
-        jobs = compile_jobs(batch_df).persist()
-        try:
-            job_store.append(jobs.select(*_job_cols()))
-            executed = execute_jobs(spark, jobs, src_root, dest_root)
-            job_store.append(executed.select(*_job_cols()))
-        finally:
-            jobs.unpersist()  # a batch that raises must not leak it
+        replicate_batch(spark, job_store, batch_df, src_root, dest_root)
 
     q = (
         events_stream.writeStream.foreachBatch(sink)

@@ -24,17 +24,17 @@ from reair_spark.state import JobStore
 
 def _store_with_jobs(spark, path):
     store = JobStore(spark, path)
-    store.append(spark.createDataFrame(
+    store.append_rows(spark.createDataFrame(
         [(1, "COPY_PARTITION", "PENDING", "db1", "t1")],
         "job_id long, operation string, status string, db string, "
         "table string",
-    ))
-    store.append(spark.createDataFrame(
+    ).collect())
+    store.append_rows(spark.createDataFrame(
         [(1, "COPY_PARTITION", "RUNNING", "db1", "t1"),
          (2, "COPY_PARTITION", "SUCCESSFUL", "db1", "t2")],
         "job_id long, operation string, status string, db string, "
         "table string",
-    ))
+    ).collect())
     return store
 
 
@@ -60,11 +60,11 @@ def test_jobstore_recovers_crash_between_compact_renames(spark, tmp_path):
     assert not os.path.exists(f"{path}.__compacting")
     assert not os.path.exists(f"{path}.__old")
     # seq resumed: a post-recovery append must win last-writer-wins
-    recovered.append(spark.createDataFrame(
+    recovered.append_rows(spark.createDataFrame(
         [(1, "COPY_PARTITION", "SUCCESSFUL", "db1", "t1")],
         "job_id long, operation string, status string, db string, "
         "table string",
-    ))
+    ).collect())
     assert recovered.current().filter(
         "job_id = 1 AND status = 'SUCCESSFUL'"
     ).count() == 1

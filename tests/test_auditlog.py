@@ -1,19 +1,17 @@
 """JDBC audit-log source (auditlog.py) against embedded Derby — the
 incremental loop's S5 parity path (AuditLogReader.java:199-225),
-end-to-end through run_incremental_jdbc."""
+end-to-end through events.run_incremental polling the JDBC tail."""
 
 from __future__ import annotations
 
 import datetime
+import os
 
 import pytest
 
-from reair_spark.auditlog import (
-    JdbcAuditLogSource,
-    run_incremental_jdbc,
-    write_events_to_jdbc,
-)
+from reair_spark.auditlog import JdbcAuditLogSource, write_events_to_jdbc
 from reair_spark.catalog import DirectoryCatalog
+from reair_spark.events import run_incremental
 from reair_spark.state import JobStore, KeyValueStore
 from tests.test_batch_replication import _make_unpartitioned
 
@@ -55,19 +53,19 @@ def test_tail_batches_filter_and_group(spark, tmp_path, source_factory):
         (4, _T0, "SWITCHDATABASE", "use db1", []),        # filtered in SQL
         (5, _T0, "DROPTABLE", "drop t9", []),             # entry without objects
     ])
-    src = source_factory(url, batch_size=2)
+    src = source_factory(url)
 
-    b1 = src.read_batch(spark, 0)
+    b1, ids1 = src.read_batch(spark, 0, 2)
     r1 = {r["id"]: r for r in b1.collect()}
-    assert sorted(r1) == [1, 3]                           # skipped types never surface
+    assert sorted(r1) == ids1 == [1, 3]                   # skipped types never surface
     assert len(r1[3]["objects"]) == 2                     # N object rows -> one entry
     assert r1[1]["objects"][0]["name"] == "db1.t1"
 
-    b2 = src.read_batch(spark, max(r1))
+    b2, ids2 = src.read_batch(spark, max(r1), 2)
     r2 = b2.collect()
-    assert [r["id"] for r in r2] == [5]
+    assert [r["id"] for r in r2] == ids2 == [5]
     assert r2[0]["objects"] == []                         # no-objects entry kept
-    assert src.read_batch(spark, 5) is None               # drained
+    assert src.read_batch(spark, 5, 2) is None            # drained
 
 
 def test_backfill_range_matches_tail(spark, tmp_path, source_factory):
@@ -76,14 +74,15 @@ def test_backfill_range_matches_tail(spark, tmp_path, source_factory):
         (i, _T0, "CREATETABLE", f"c{i}", [("OUTPUT", "TABLE", f"db1.t{i}", "{}")])
         for i in range(1, 11)
     ])
-    src = source_factory(url, batch_size=3)
+    src = source_factory(url)
     tail_ids = []
     last = 0
     while True:
-        b = src.read_batch(spark, last)
-        if b is None:
+        page = src.read_batch(spark, last, 3)
+        if page is None:
             break
-        ids = [r["id"] for r in b.collect()]
+        ids = [r["id"] for r in page[0].collect()]
+        assert sorted(ids) == page[1]
         tail_ids += ids
         last = max(ids)
     ranged = src.read_range(spark, 0, 10, num_partitions=4)
@@ -103,22 +102,27 @@ def test_run_incremental_jdbc_end_to_end(spark, tmp_path, source_factory):
         (1, _T0, "CREATETABLE", "c1", [("OUTPUT", "TABLE", "db1.t1", "{}")]),
         (2, _T0, "CREATETABLE", "c2", [("OUTPUT", "TABLE", "db1.t2", "{}")]),
     ])
-    src = source_factory(url, batch_size=1)
+    src = source_factory(url)
+    log_dir = f"{state_dir}/replication_jobs"
 
-    r1 = run_incremental_jdbc(
-        spark, src, src_root, dest_root, state_dir, max_batches=1
+    r1 = run_incremental(
+        spark, src, src_root, dest_root, state_dir, batch_size=1, max_batches=1
     )
     assert r1["last_id"] == 1 and r1["batches"] == 1
     assert dest_cat.get_table("db1", "t1") is not None
     assert KeyValueStore(f"{state_dir}/key_value.json").get("last_persisted_id") == "1"
+    # one writer: a PENDING and a terminal file per executed batch
+    assert len(os.listdir(log_dir)) == 2
 
-    r2 = run_incremental_jdbc(spark, src, src_root, dest_root, state_dir)
-    assert r2["last_id"] == 2
+    r2 = run_incremental(spark, src, src_root, dest_root, state_dir, batch_size=1)
+    assert r2["last_id"] == 2 and r2["batches"] == 1
     assert dest_cat.get_table("db1", "t2") is not None
+    assert len(os.listdir(log_dir)) == 4
 
-    r3 = run_incremental_jdbc(spark, src, src_root, dest_root, state_dir)
+    r3 = run_incremental(spark, src, src_root, dest_root, state_dir, batch_size=1)
     assert r3["batches"] == 0                              # replay safety
     assert set(r3["job_status_counts"]) <= {"SUCCESSFUL", "NOT_COMPLETABLE"}
+    assert len(os.listdir(log_dir)) == 4
 
 
 def test_run_incremental_jdbc_start_after_id(spark, tmp_path, source_factory):
@@ -139,16 +143,60 @@ def test_run_incremental_jdbc_start_after_id(spark, tmp_path, source_factory):
     src = source_factory(url)
     # crash-persisted PENDING job for event 1
     store = JobStore(spark, f"{state_dir}/replication_jobs")
-    first = src.read_batch(spark, 0).filter("id = 1")
-    store.append(compile_jobs(first).select(*_job_cols()))
+    first = src.read_batch(spark, 0, 200)[0].filter("id = 1")
+    store.append_rows(compile_jobs(first).select(*_job_cols()).collect())
 
-    res = run_incremental_jdbc(
+    res = run_incremental(
         spark, src, src_root, dest_root, state_dir, start_after_id=1
     )
     assert res["job_status_counts"].get("ABORTED") == 1
     assert dest_cat.get_table("db1", "t1") is None        # aborted, not run
     assert dest_cat.get_table("db1", "t2") is not None    # replayed
     assert res["last_id"] == 2
+
+
+def test_pause_stops_jdbc_tail_loop(spark, tmp_path, source_factory):
+    """The monitor's pause flag stops the loop on every polled source,
+    the JDBC tail included: a paused loop consumes no batch, replicates
+    nothing and leaves the checkpoint where it was."""
+    url = _derby_url(tmp_path, "paused")
+    src_root, dest_root = str(tmp_path / "src"), str(tmp_path / "dest")
+    state_dir = str(tmp_path / "state")
+    _make_unpartitioned(DirectoryCatalog(src_root), "db1", "t1")
+    _seed(spark, url, [
+        (1, _T0, "CREATETABLE", "c1", [("OUTPUT", "TABLE", "db1.t1", "{}")]),
+    ])
+    kv = KeyValueStore(f"{state_dir}/key_value.json")
+    kv.set("last_persisted_id", "0")
+    kv.set("paused", "true")
+
+    res = run_incremental(
+        spark, source_factory(url), src_root, dest_root, state_dir
+    )
+    assert res["batches"] == 0
+    assert res["last_id"] == 0
+    assert kv.get("last_persisted_id") == "0"
+    assert DirectoryCatalog(dest_root).get_table("db1", "t1") is None
+
+
+def test_cli_incremental_polls_jdbc_tail(spark, tmp_path, capsys):
+    """`incremental <jdbc:url>` runs the same loop over the JDBC tail
+    (a tail holding only non-replicating commands is drained at once);
+    `--streaming` reads a parquet dir and refuses a jdbc: URL."""
+    import json
+
+    from reair_spark.__main__ import main
+
+    url = _derby_url(tmp_path, "cli")
+    _seed(spark, url, [(1, _T0, "SWITCHDATABASE", "use db1", [])])
+    args = ["incremental", url, str(tmp_path / "src"), str(tmp_path / "dest"),
+            str(tmp_path / "state"), "--jdbc-driver", _PROPS["driver"]]
+
+    assert main(args) == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["batches"] == 0 and out["last_id"] == 0
+    with pytest.raises(SystemExit):
+        main(args + ["--streaming"])
 
 
 def test_db_watchdog_recovers_then_expires(spark, tmp_path, source_factory):
@@ -171,15 +219,15 @@ def test_db_watchdog_recovers_then_expires(spark, tmp_path, source_factory):
         def __init__(self, inner, fail_times):
             self.inner, self.left = inner, fail_times
 
-        def read_batch(self, spark, after_id):
+        def read_batch(self, spark, after_id, batch_size):
             if self.left > 0:
                 self.left -= 1
                 raise RuntimeError("connection refused")
-            return self.inner.read_batch(spark, after_id)
+            return self.inner.read_batch(spark, after_id, batch_size)
 
     real = source_factory(url)
     # two transient failures, generous limit: loop recovers and finishes
-    res = run_incremental_jdbc(
+    res = run_incremental(
         spark, Flaky(real, 2), src_root, dest_root, str(tmp_path / "s1"),
         watchdog_limit_s=30.0, watchdog_retry_s=0.05,
     )
@@ -190,7 +238,7 @@ def test_db_watchdog_recovers_then_expires(spark, tmp_path, source_factory):
     import pytest
 
     with pytest.raises(DbWatchdogExpired):
-        run_incremental_jdbc(
+        run_incremental(
             spark, Flaky(real, 10**9), src_root, dest_root,
             str(tmp_path / "s2"),
             watchdog_limit_s=0.2, watchdog_retry_s=0.05,

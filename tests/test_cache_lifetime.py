@@ -14,8 +14,8 @@ that grows with every batch. These tests pin three properties over
 - re-reading the copy and commit results never re-runs a copy or a
   commit.
 
-A batch that raises must release its cache too (the JDBC loop and the
-streaming sink).
+A batch that raises must leave nothing cached either (the loop polling
+a JDBC tail, and the streaming sink).
 """
 
 from __future__ import annotations
@@ -180,23 +180,23 @@ def test_incremental_batches_are_released(spark, tmp_path, rdds_before):
 
 
 def _raise(*_a, **_k):
-    raise RuntimeError("execute_jobs failed")
+    raise RuntimeError("execute_job_rows failed")
 
 
 def test_jdbc_batch_that_raises_releases_its_cache(
     spark, tmp_path, monkeypatch, rdds_before
 ):
     from reair_spark import events
-    from reair_spark.auditlog import JdbcAuditLogSource, run_incremental_jdbc
+    from reair_spark.auditlog import JdbcAuditLogSource
     from tests.test_auditlog import _PROPS, _derby_url, _seed
 
     url = _derby_url(tmp_path, "fail")
     _seed(spark, url, [
         (1, _T0, "CREATETABLE", "c1", [("OUTPUT", "TABLE", "db1.t1", "{}")]),
     ])
-    monkeypatch.setattr(events, "execute_jobs", _raise)
-    with pytest.raises(RuntimeError, match="execute_jobs failed"):
-        run_incremental_jdbc(
+    monkeypatch.setattr(events, "execute_job_rows", _raise)
+    with pytest.raises(RuntimeError, match="execute_job_rows failed"):
+        events.run_incremental(
             spark, JdbcAuditLogSource(url, properties=_PROPS),
             str(tmp_path / "src"), str(tmp_path / "dest"),
             str(tmp_path / "state"),
@@ -218,8 +218,8 @@ def test_stream_batch_that_raises_releases_its_cache(
         EVENT_SCHEMA,
     ).write.parquet(ev_dir)
     stream = spark.readStream.schema(EVENT_SCHEMA).parquet(ev_dir)
-    monkeypatch.setattr(events, "execute_jobs", _raise)
-    with pytest.raises(StreamingQueryException, match="execute_jobs failed"):
+    monkeypatch.setattr(events, "execute_job_rows", _raise)
+    with pytest.raises(StreamingQueryException, match="execute_job_rows failed"):
         stream_replicate(
             spark, stream, str(tmp_path / "src"), str(tmp_path / "dest"),
             str(tmp_path / "state"), str(tmp_path / "ckpt"),

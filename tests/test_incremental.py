@@ -206,7 +206,9 @@ def test_start_after_id_aborts_inflight_and_forces_resume(spark, events_df, tmp_
     # simulate a crash mid-flight: event 1's job persisted PENDING,
     # never executed, checkpoint never advanced
     store = JobStore(spark, f"{state_dir}/replication_jobs")
-    store.append(compile_jobs(events.filter("id = 1")).select(*_job_cols()))
+    store.append_rows(
+        compile_jobs(events.filter("id = 1")).select(*_job_cols()).collect()
+    )
     assert store.incomplete().count() == 1
 
     res = run_incremental(

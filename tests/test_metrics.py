@@ -119,14 +119,14 @@ def test_job_store_lag(spark, tmp_path):
         )
 
     t0 = time.time()
-    store.append(_jobs([(1, "COPY", "PENDING", "db1", "t1", None, None, None, 10),
-                        (2, "COPY", "PENDING", "db1", "t2", None, None, None, 11)]))
-    store.append(_jobs([(2, "COPY", "SUCCESSFUL", "db1", "t2", None, None, None, 11),
-                        (1, "COPY", "RUNNING", "db1", "t1", None, None, None, 10)]))
+    store.append_rows(_jobs([(1, "COPY", "PENDING", "db1", "t1", None, None, None, 10),
+                             (2, "COPY", "PENDING", "db1", "t2", None, None, None, 11)]).collect())
+    store.append_rows(_jobs([(2, "COPY", "SUCCESSFUL", "db1", "t2", None, None, None, 11),
+                             (1, "COPY", "RUNNING", "db1", "t1", None, None, None, 10)]).collect())
     lag = store.lag_seconds(now_ts=t0 + 100)
     assert 90 <= lag <= 110  # job 1 still in flight, clocked from first append
 
-    store.append(_jobs([(1, "COPY", "SUCCESSFUL", "db1", "t1", None, None, None, 10)]))
+    store.append_rows(_jobs([(1, "COPY", "SUCCESSFUL", "db1", "t1", None, None, None, 10)]).collect())
     assert store.lag_seconds() == 0.0
 
 
@@ -147,11 +147,11 @@ def test_job_store_seq_survives_restart(spark, tmp_path):
         )
 
     s1 = JobStore(spark, path)
-    s1.append(_jobs([(1, "COPY", "PENDING", "db1", "t1", None, None, None, 10)]))
-    s1.append(_jobs([(1, "COPY", "RUNNING", "db1", "t1", None, None, None, 10)]))
+    s1.append_rows(_jobs([(1, "COPY", "PENDING", "db1", "t1", None, None, None, 10)]).collect())
+    s1.append_rows(_jobs([(1, "COPY", "RUNNING", "db1", "t1", None, None, None, 10)]).collect())
 
     s2 = JobStore(spark, path)  # "restart"
-    s2.append(_jobs([(1, "COPY", "SUCCESSFUL", "db1", "t1", None, None, None, 10)]))
+    s2.append_rows(_jobs([(1, "COPY", "SUCCESSFUL", "db1", "t1", None, None, None, 10)]).collect())
     cur = s2.current().collect()
     assert [(r.job_id, r.status) for r in cur] == [(1, "SUCCESSFUL")]
     assert s2.incomplete().count() == 0
@@ -184,8 +184,8 @@ def test_status_snapshot_over_seeded_state(spark, tmp_path):
         "partition_names array<string>, rename_to_db string, "
         "rename_to_table string, src_event_id long",
     )
-    store.append(jobs)
-    store.append(jobs.filter("job_id = 1").replace("PENDING", "SUCCESSFUL", "status"))
+    store.append_rows(jobs.collect())
+    store.append_rows(jobs.filter("job_id = 1").replace("PENDING", "SUCCESSFUL", "status").collect())
     KeyValueStore(f"{state}/key_value.json").set("last_persisted_id", "12")
 
     snap = status_snapshot(spark, state)
@@ -203,12 +203,12 @@ def test_status_cli(spark, tmp_path, capsys):
     from reair_spark.state import JobStore
 
     state = str(tmp_path / "state")
-    JobStore(spark, f"{state}/replication_jobs").append(spark.createDataFrame(
+    JobStore(spark, f"{state}/replication_jobs").append_rows(spark.createDataFrame(
         [(5, "COPY_PARTITION", "PENDING", "db", "t", ["ds=1"], None, None, 1)],
         "job_id long, operation string, status string, db string, table string, "
         "partition_names array<string>, rename_to_db string, "
         "rename_to_table string, src_event_id long",
-    ))
+    ).collect())
     assert main(["status", state]) == 0
     out = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["n_active"] == 1 and out["active_jobs"][0]["job_id"] == 5

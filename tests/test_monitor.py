@@ -35,8 +35,8 @@ def seeded_state(spark, tmp_path):
         "partition_names array<string>, rename_to_db string, "
         "rename_to_table string, src_event_id long",
     )
-    store.append(jobs)
-    store.append(jobs.filter("job_id = 1").replace("PENDING", "SUCCESSFUL", "status"))
+    store.append_rows(jobs.collect())
+    store.append_rows(jobs.filter("job_id = 1").replace("PENDING", "SUCCESSFUL", "status").collect())
     KeyValueStore(f"{state}/key_value.json").set("last_persisted_id", "11")
     return state
 
@@ -175,18 +175,18 @@ def test_jobstore_compact_preserves_current_state(spark, tmp_path):
     history (row count drops to |jobs|)."""
     store = JobStore(spark, str(tmp_path / "jobs"))
     # 3 jobs × several transitions each
-    store.append(_mk_jobs(spark, [
+    store.append_rows(_mk_jobs(spark, [
         (1, "COPY_UNPARTITIONED_TABLE", "PENDING", "db", "t1", [], None, None, 10),
         (2, "COPY_PARTITION", "PENDING", "db", "t2", ["ds=1"], None, None, 11),
         (3, "DROP_TABLE", "PENDING", "db", "t3", [], None, None, 12),
-    ]))
-    store.append(_mk_jobs(spark, [
+    ]).collect())
+    store.append_rows(_mk_jobs(spark, [
         (1, "COPY_UNPARTITIONED_TABLE", "RUNNING", "db", "t1", [], None, None, 10),
         (2, "COPY_PARTITION", "SUCCESSFUL", "db", "t2", ["ds=1"], None, None, 11),
-    ]))
-    store.append(_mk_jobs(spark, [
+    ]).collect())
+    store.append_rows(_mk_jobs(spark, [
         (1, "COPY_UNPARTITIONED_TABLE", "FAILED", "db", "t1", [], None, None, 10),
-    ]))
+    ]).collect())
     before = {(r.job_id, r.status) for r in store.current().collect()}
     assert before == {(1, "FAILED"), (2, "SUCCESSFUL"), (3, "PENDING")}
     raw_before = spark.read.parquet(store.path).count()
@@ -201,27 +201,27 @@ def test_jobstore_compact_preserves_current_state(spark, tmp_path):
     assert after_store._seq >= 3  # max seq survived the rewrite
 
     # post-compaction append still wins for job 3
-    after_store.append(_mk_jobs(spark, [
+    after_store.append_rows(_mk_jobs(spark, [
         (3, "DROP_TABLE", "SUCCESSFUL", "db", "t3", [], None, None, 12),
-    ]))
+    ]).collect())
     assert {(r.job_id, r.status) for r in after_store.current().collect()} \
         == {(1, "FAILED"), (2, "SUCCESSFUL"), (3, "SUCCESSFUL")}
 
 
 def test_jobstore_compact_drop_terminal_keeps_only_inflight(spark, tmp_path):
     store = JobStore(spark, str(tmp_path / "jobs"))
-    store.append(_mk_jobs(spark, [
+    store.append_rows(_mk_jobs(spark, [
         (1, "COPY_PARTITION", "SUCCESSFUL", "db", "t1", [], None, None, 1),
         (2, "COPY_PARTITION", "PENDING", "db", "t2", [], None, None, 2),
-    ]))
+    ]).collect())
     assert store.compact(keep_terminal=False) == 1
     cur = store.current().collect()
     assert [(r.job_id, r.status) for r in cur] == [(2, "PENDING")]
 
     # all-terminal → compact removes the log; store reads as empty
-    store.append(_mk_jobs(spark, [
+    store.append_rows(_mk_jobs(spark, [
         (2, "COPY_PARTITION", "SUCCESSFUL", "db", "t2", [], None, None, 2),
-    ]))
+    ]).collect())
     assert store.compact(keep_terminal=False) == 0
     import os
 

@@ -253,10 +253,13 @@ def test_stream_replicate_end_to_end(spark, tmp_path):
     assert store.incomplete().count() == 0
     assert store.lag_seconds() == 0.0
     n_transitions = spark.read.parquet(f"{state}/replication_jobs").count()
+    # one writer: a PENDING and a terminal file per micro-batch
+    assert len(os.listdir(f"{state}/replication_jobs")) == 4
 
     # replay with same checkpoint: no new batches, no new transitions
     stream_replicate(spark, _stream(), src_root, dest_root, state, ckpt)
     assert spark.read.parquet(f"{state}/replication_jobs").count() == n_transitions
+    assert len(os.listdir(f"{state}/replication_jobs")) == 4
 
 
 def test_funnel_ttl_path(spark, tmp_path):

@@ -244,7 +244,7 @@ def test_dest_only_zonemapped_table_is_never_dropped(spark, tmp_path):
 
 def test_incremental_event_publishes_zonemapped_target(spark, tmp_path):
     """The incremental loop composes with format targets FOR FREE:
-    execute_jobs converges every touched table through the targeted
+    execute_job_rows converges every touched table through the targeted
     batch replication, whose zonemapped dispatch publishes through
     zonemap_overwrite — so an audit event naming a table whose DEST
     record declares the layout lands as a manifest-planned publish,
