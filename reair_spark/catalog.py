@@ -25,7 +25,6 @@ import os
 from typing import Protocol, runtime_checkable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from reair_spark.fs import fs_exists, fs_for
@@ -537,10 +536,13 @@ def snapshot_partitions(spark: SparkSession, catalog: MetastoreCatalog) -> DataF
     return rows_df(spark, rows, PARTITION_SCHEMA)
 
 
-def strip_non_comparables(params_col):
+def strip_non_comparables(params_sql: str) -> str:
     """Comparison semantics (incremental/ReplicationUtils.java:48-66):
     objects match iff equal after zeroing createTime/lastAccessTime.
-    Parameters keep TLDT (it IS compared — it's the version)."""
-    return F.map_filter(
-        params_col, lambda k, _v: ~k.isin("createTime", "lastAccessTime")
+    Parameters keep TLDT (it IS compared — it's the version). Takes and
+    returns SQL text (the diff builds its projection as one SQL
+    expression per column)."""
+    return (
+        f"map_filter({params_sql},"
+        " (k, v) -> k NOT IN ('createTime', 'lastAccessTime'))"
     )

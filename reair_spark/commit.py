@@ -32,6 +32,7 @@ from pyspark.sql import types as T
 from collections.abc import Callable
 
 from reair_spark.catalog import TLDT, DirectoryCatalog, MetastoreCatalog
+from reair_spark.filters import sql_str
 
 COMMIT_RESULT_SCHEMA = T.StructType(
     [
@@ -63,32 +64,22 @@ def rewrite_locations(plan: DataFrame, src_root: str, dest_root: str) -> DataFra
     to ``dest_root + '_archive/…'``.  The rewrite itself is built with
     ``concat`` + ``substring`` — NOT ``regexp_replace`` — so a
     dest_root containing ``$`` or ``\\`` is copied literally rather
-    than being interpreted as a Java-regex group reference."""
+    than being interpreted as a Java-regex group reference. The whole
+    rewrite is one SQL expression (one JVM round-trip to build)."""
     root = src_root.rstrip("/")
-    child_prefix = root + "/"
-
-    derived = F.concat_ws(
-        "/", F.lit(dest_root), F.col("db"), F.col("table")
-    )
-    derived = F.when(
-        F.col("partition_name").isNotNull(),
-        F.concat_ws("/", derived, F.col("partition_name")),
-    ).otherwise(derived)
+    dest = sql_str(dest_root)
     # dest_root + the suffix of src_path after the root — pure string
-    # concat, no regex replacement semantics anywhere.
-    prefix_rewritten = F.concat(
-        F.lit(dest_root),
-        F.substring(F.col("src_path"), len(root) + 1, 2_147_483_647),
-    )
-    in_root = F.col("src_path").startswith(child_prefix) | (
-        F.col("src_path") == F.lit(root)
-    )
+    # concat, no regex replacement semantics anywhere. The derived
+    # branch's concat_ws skips a NULL partition_name (table rows).
     return plan.withColumn(
         "dest_path",
-        F.when(
-            F.col("dest_path").isNull() & F.col("src_path").isNotNull(),
-            F.when(in_root, prefix_rewritten).otherwise(derived),
-        ).otherwise(F.col("dest_path")),
+        F.expr(
+            "CASE WHEN dest_path IS NOT NULL OR src_path IS NULL THEN dest_path"
+            f" WHEN startswith(src_path, {sql_str(root + '/')})"
+            f" OR src_path = {sql_str(root)}"
+            f" THEN concat({dest}, substring(src_path, {len(root) + 1}, 2147483647))"
+            f" ELSE concat_ws('/', {dest}, db, `table`, partition_name) END"
+        ),
     )
 
 

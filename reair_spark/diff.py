@@ -10,6 +10,12 @@ snapshot DataFrames — at 100 TB the inputs are metadata-sized (rows ∝
 objects, not bytes), the join keys are (db, table[, partition_name]),
 and AQE picks broadcast vs sort-merge per side.
 
+The CASE ladder and every other projection are built as SQL text
+(``selectExpr``/``F.expr``), not as ``pyspark.sql.functions`` chains:
+each ``F.*`` node is one py4j round-trip, so the per-node form cost
+~3,000 driver→JVM calls per targeted incremental op; one SQL string
+per projection costs one.
+
 Decision table (TaskEstimatorTest.java:37-322 is the spec):
 - src only                       → COPY_* (metadata + data)
 - dest only                      → DROP_*
@@ -58,44 +64,35 @@ def _with_digest(snapshot: DataFrame, digests: DataFrame | None) -> DataFrame:
     """Attach per-location data digests (inventory.dir_digest output,
     keyed by root) — null digest means location unknown/empty."""
     if digests is None:
-        return snapshot.withColumn("data_digest", F.lit(None).cast("string"))
-    d = digests.select(
-        F.col("root").alias("location"),
-        F.concat_ws(
-            ":",
-            F.col("n_files").cast("string"),
-            F.col("total_size").cast("string"),
-            F.col("digest").cast("string"),
-        ).alias("data_digest"),
+        return snapshot.selectExpr("*", "CAST(NULL AS STRING) AS data_digest")
+    d = digests.selectExpr(
+        "root AS location",
+        "concat_ws(':', CAST(n_files AS STRING), CAST(total_size AS STRING), "
+        "CAST(digest AS STRING)) AS data_digest",
     )
     return snapshot.join(d, "location", "left")
 
 
-def _meta_cmp_col(side: str, kind: str) -> F.Column:
+def _meta_cmp_sql(side: str, kind: str) -> str:
     """Canonical comparable rendering of one side's metadata
     (stripNonComparables + schemasMatch in one string)."""
-    params = strip_non_comparables(F.col(f"{side}.parameters"))
-    canon_params = F.map_entries(params)
-    canon_params = F.array_sort(canon_params)
-    if kind == "table":
-        return F.to_json(
-            F.struct(
-                F.col(f"{side}.table_type"),
-                F.col(f"{side}.cols"),
-                F.col(f"{side}.partition_keys"),
-                F.col(f"{side}.serde"),
-                canon_params.alias("params"),
-            )
-        )
-    return F.to_json(
-        F.struct(F.col(f"{side}.values"), canon_params.alias("params"))
+    params = (
+        f"array_sort(map_entries({strip_non_comparables(f'{side}.parameters')}))"
+        " AS params"
     )
+    if kind == "table":
+        fields = (
+            f"{side}.table_type, {side}.cols, {side}.partition_keys, {side}.serde"
+        )
+    else:
+        fields = f"{side}.`values`"
+    return f"to_json(struct({fields}, {params}))"
 
 
-def _tldt(side: str) -> F.Column:
-    return F.coalesce(
-        F.element_at(F.col(f"{side}.parameters"), "transient_lastDdlTime").cast("long"),
-        F.lit(0),
+def _tldt_sql(side: str) -> str:
+    return (
+        f"coalesce(CAST(element_at({side}.parameters, 'transient_lastDdlTime')"
+        " AS BIGINT), 0)"
     )
 
 
@@ -104,57 +101,66 @@ def _diff(
     dest: DataFrame,
     keys: list[str],
     kind: str,
-    copy_action,
+    copy_action: str,
     drop_action: str,
     overwrite_newer: bool,
 ) -> DataFrame:
-    s = src.withColumn("present", F.lit(True)).alias("s")
-    d = dest.withColumn("present", F.lit(True)).alias("d")
-    joined = s.join(d, keys, "full_outer")
-
-    src_exists = F.coalesce(F.col("s.present"), F.lit(False))
-    dest_exists = F.coalesce(F.col("d.present"), F.lit(False))
-
-    meta_equal = _meta_cmp_col("s", kind) == _meta_cmp_col("d", kind)
-    data_equal = (
-        F.col("s.data_digest").isNotNull()
-        & (F.col("s.data_digest") == F.col("d.data_digest"))
-    ) | (F.col("s.data_digest").isNull() & F.col("d.data_digest").isNull())
+    """One level's plan in PLAN_COLUMNS order. ``copy_action`` is SQL
+    text. The decision inputs are one projection and the CASE ladder
+    over them a second, each column one shallow SQL expression with no
+    grouping parentheses: the SQL parser caches a prediction state per
+    distinct token run inside a ``(...)`` group, so deep or
+    parenthesized text grows the driver heap by MBs."""
+    s = src.selectExpr("*", "true AS present").alias("s")
+    d = dest.selectExpr("*", "true AS present").alias("d")
 
     # views and s3-rooted locations: metadata-only replication (F7)
-    copies_data = F.lit(True)
+    copies_data = "true"
     if kind == "table":
-        copies_data = (F.col("s.table_type") != "VIRTUAL_VIEW") & ~F.coalesce(
-            F.col("s.location").startswith("s3"), F.lit(False)
+        copies_data = (
+            "s.table_type != 'VIRTUAL_VIEW'"
+            " AND NOT coalesce(startswith(s.location, 's3'), false)"
         )
-
-    dest_is_newer = _tldt("d") > _tldt("s")
-    newer_guard = F.lit(overwrite_newer) | ~dest_is_newer
-
-    action = (
-        F.when(src_exists & ~dest_exists, copy_action)
-        .when(~src_exists & dest_exists, F.lit(drop_action))
-        .when(meta_equal & (data_equal | ~copies_data), F.lit(NO_OP))
-        .when(~newer_guard, F.lit(NO_OP))  # DEST_IS_NEWER
-        .otherwise(copy_action)
-    )
-    is_copy = action.startswith("COPY")
-    update_metadata = F.when(is_copy & (~dest_exists | ~meta_equal), True).otherwise(False)
-    update_data = F.when(
-        is_copy & copies_data & (~dest_exists | ~data_equal), True
-    ).otherwise(False)
-
     part_col = (
-        F.col("partition_name") if kind == "partition" else F.lit(None).cast("string")
+        "partition_name" if kind == "partition"
+        else "CAST(NULL AS STRING) AS partition_name"
     )
-    return joined.select(
-        action.alias("action"),
-        update_metadata.alias("update_metadata"),
-        update_data.alias("update_data"),
-        F.col("s.location").alias("src_path"),
-        F.col("d.location").alias("dest_path"),
-        *[F.col(k) for k in keys if k != "partition_name"],
-        part_col.alias("partition_name"),
+    facts = s.join(d, keys, "full_outer").selectExpr(
+        "coalesce(s.present, false) AS src_exists",
+        "coalesce(d.present, false) AS dest_exists",
+        f"{_meta_cmp_sql('s', kind)} = {_meta_cmp_sql('d', kind)} AS meta_equal",
+        "s.data_digest IS NOT NULL AND s.data_digest = d.data_digest"
+        " OR s.data_digest IS NULL AND d.data_digest IS NULL AS data_equal",
+        f"{copies_data} AS copies_data",
+        f"{_tldt_sql('d')} > {_tldt_sql('s')} AS dest_is_newer",
+        f"{copy_action} AS copy_action",
+        "s.location AS src_path",
+        "d.location AS dest_path",
+        *[f"`{k}`" for k in keys if k != "partition_name"],
+        part_col,
+    )
+    # an OR inside an AND is split into two WHENs (same truth table)
+    dest_is_newer = (
+        "" if overwrite_newer else f" WHEN dest_is_newer THEN '{NO_OP}'"
+    )
+    return facts.selectExpr(
+        "*",
+        "CASE WHEN src_exists AND NOT dest_exists THEN copy_action"
+        f" WHEN NOT src_exists AND dest_exists THEN '{drop_action}'"
+        f" WHEN meta_equal AND data_equal THEN '{NO_OP}'"
+        f" WHEN meta_equal AND NOT copies_data THEN '{NO_OP}'"
+        f"{dest_is_newer}"  # DEST_IS_NEWER guard
+        " ELSE copy_action END AS action",
+    ).selectExpr(
+        "action",
+        "CASE WHEN startswith(action, 'COPY') AND NOT dest_exists THEN true"
+        " WHEN startswith(action, 'COPY') AND NOT meta_equal THEN true"
+        " ELSE false END AS update_metadata",
+        "CASE WHEN startswith(action, 'COPY') AND copies_data"
+        " AND NOT dest_exists THEN true"
+        " WHEN startswith(action, 'COPY') AND copies_data"
+        " AND NOT data_equal THEN true ELSE false END AS update_data",
+        *[f"`{c}`" for c in PLAN_COLUMNS[3:]],
     )
 
 
@@ -169,10 +175,10 @@ def table_diff(
     Partitioned tables get COPY_PARTITIONED_TABLE (metadata-only at
     table level; their data moves per-partition, same as the
     reference's eager dest-table create at TableCompareWorker:146-156)."""
-    copy_action = F.when(
-        F.size(F.coalesce(F.col("s.partition_keys"), F.array())) > 0,
-        COPY_PARTITIONED_TABLE,
-    ).otherwise(COPY_UNPARTITIONED_TABLE)
+    copy_action = (
+        "CASE WHEN size(coalesce(s.partition_keys, array())) > 0"
+        f" THEN '{COPY_PARTITIONED_TABLE}' ELSE '{COPY_UNPARTITIONED_TABLE}' END"
+    )
     src = _with_digest(src_tables, src_digests)
     dest = _with_digest(dest_tables, dest_digests)
     plan = _diff(
@@ -181,8 +187,9 @@ def table_diff(
     # partitioned tables never copy table-level data
     return plan.withColumn(
         "update_data",
-        F.when(F.col("action") == COPY_PARTITIONED_TABLE, False).otherwise(
-            F.col("update_data")
+        F.expr(
+            f"CASE WHEN action = '{COPY_PARTITIONED_TABLE}' THEN false"
+            " ELSE update_data END"
         ),
     )
 
@@ -241,7 +248,7 @@ def partition_diff(
         dest,
         ["db", "table", "partition_name"],
         "partition",
-        F.lit(COPY_PARTITION),
+        f"'{COPY_PARTITION}'",
         DROP_PARTITION,
         overwrite_newer,
     )
@@ -260,4 +267,4 @@ def warehouse_plan(
     equivalent of the reference's whole stage 1."""
     t = table_diff(src_tables, dest_tables, src_digests, dest_digests, overwrite_newer)
     p = partition_diff(src_parts, dest_parts, src_digests, dest_digests, overwrite_newer)
-    return t.select(PLAN_COLUMNS).union(p.select(PLAN_COLUMNS))
+    return t.union(p)

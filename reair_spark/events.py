@@ -15,7 +15,9 @@ ReplicationServer.java:348-506 loop + ReplicationJobFactory.java:
   RENAME_FROM/input≠output, ReplicationJobFactory:585-620) → dynamic-
   partition batching (>1 partitions of one table in one entry → ONE
   COPY_PARTITIONS job, :660-663) — all with higher-order array
-  functions, one explode, no Python UDFs.
+  functions (``filter(objects, o -> …)`` lambdas), one explode, no
+  Python UDFs. Each projection is SQL text, so building the compile
+  costs one py4j round-trip per projection, not one per column node.
 - exchange-partition workaround: the Hive bug (HIVE-12865) loses
   outputs for EXCHANGE_PARTITION, so the reference regex-parses the
   SQL text (ExchangePartitionParser.java:19-52); ours is the same
@@ -43,7 +45,7 @@ from pyspark.sql import functions as F
 
 from reair_spark.auditlog import DbWatchdogExpired
 from reair_spark.catalog import DirectoryCatalog
-from reair_spark.filters import replicating_commands
+from reair_spark.filters import replicating_commands, sql_str
 from reair_spark.replicate import replicate_warehouse
 from reair_spark.state import JobStore, KeyValueStore
 
@@ -54,132 +56,116 @@ EXCHANGE_RE = (
     r"(?i)ALTER\s+TABLE\s+(\S+)\s+EXCHANGE\s+PARTITION\s*"
     r"\((.*)\)\s+WITH\s+TABLE\s+(\S+)"
 )
+# its partition-spec group → partition name: "ds='1', hr=2" → ds=1/hr=2
+SPEC_SEP_RE = r"\s*,\s*"
+SPEC_KV_RE = r"\s*=\s*'?([^',/]+)'?"
 
 
 def compile_jobs(events: DataFrame) -> DataFrame:
     """Audit entries → one job row per replication action (ST5)."""
     ev = replicating_commands(events)
 
-    outputs = F.filter(F.col("objects"), lambda o: o["category"] == "OUTPUT")
-    rename_from = F.filter(F.col("objects"), lambda o: o["category"] == "RENAME_FROM")
+    outputs = "filter(objects, o -> o.category = 'OUTPUT')"
+    rename_from = "filter(objects, o -> o.category = 'RENAME_FROM')"
 
-    out_tables = F.filter(outputs, lambda o: o["obj_type"] == "TABLE")
-    out_parts = F.filter(outputs, lambda o: o["obj_type"] == "PARTITION")
-
-    is_drop = F.col("command_type").isin("DROPTABLE", "THRIFT_DROP_TABLE")
-    is_drop_part = F.col("command_type").isin("DROPPARTITION", "THRIFT_DROP_PARTITION")
-    is_rename = F.size(rename_from) > 0
-    is_exchange = F.col("command_type") == "EXCHANGEPARTITION"
-
-    base = ev.select(
+    base = ev.selectExpr(
         "id",
         "create_time",
         "command_type",
         "command",
-        out_tables.alias("out_tables"),
-        out_parts.alias("out_parts"),
-        rename_from.alias("rename_from"),
-        is_drop.alias("is_drop"),
-        is_drop_part.alias("is_drop_part"),
-        is_rename.alias("is_rename"),
-        is_exchange.alias("is_exchange"),
+        f"filter({outputs}, o -> o.obj_type = 'TABLE') AS out_tables",
+        f"filter({outputs}, o -> o.obj_type = 'PARTITION') AS out_parts",
+        f"{rename_from} AS rename_from",
+        "command_type IN ('DROPTABLE', 'THRIFT_DROP_TABLE') AS is_drop",
+        "command_type IN ('DROPPARTITION', 'THRIFT_DROP_PARTITION') AS is_drop_part",
+        f"size({rename_from}) > 0 AS is_rename",
+        "command_type = 'EXCHANGEPARTITION' AS is_exchange",
     )
 
     # --- table-level jobs -------------------------------------------------
     table_jobs = (
-        base.filter((F.size("out_tables") > 0) & ~F.col("is_exchange"))
-        .select(
+        base.where("size(out_tables) > 0 AND NOT is_exchange")
+        .selectExpr(
             "id",
             "is_drop",
             "is_rename",
-            F.explode("out_tables").alias("obj"),
+            "explode(out_tables) AS obj",
             # try_: empty array under ANSI mode must yield NULL, not throw
-            F.try_element_at(F.col("rename_from"), F.lit(1)).alias("from_obj"),
+            "try_element_at(rename_from, 1) AS from_obj",
         )
-        .select(
-            F.col("id").alias("src_event_id"),
-            F.when(F.col("is_drop"), "DROP_TABLE")
-            .when(F.col("is_rename"), "RENAME_TABLE")
-            .when(
-                F.get_json_object(F.col("obj.payload"), "$.partition_keys[0]").isNotNull(),
-                "COPY_PARTITIONED_TABLE",
-            )
-            .otherwise("COPY_UNPARTITIONED_TABLE")
-            .alias("operation"),
+        .selectExpr(
+            "id AS src_event_id",
+            "CASE WHEN is_drop THEN 'DROP_TABLE'"
+            " WHEN is_rename THEN 'RENAME_TABLE'"
+            " WHEN get_json_object(obj.payload, '$.partition_keys[0]') IS NOT NULL"
+            " THEN 'COPY_PARTITIONED_TABLE'"
+            " ELSE 'COPY_UNPARTITIONED_TABLE' END AS operation",
             # on rename the job key is the OLD name; new name rides along
-            F.coalesce(
-                F.split_part(F.col("from_obj.name"), F.lit("."), F.lit(1)),
-                F.split_part(F.col("obj.name"), F.lit("."), F.lit(1)),
-            ).alias("db"),
-            F.coalesce(
-                F.split_part(F.col("from_obj.name"), F.lit("."), F.lit(2)),
-                F.split_part(F.col("obj.name"), F.lit("."), F.lit(2)),
-            ).alias("table"),
-            F.array().cast("array<string>").alias("partition_names"),
-            F.when(
-                F.col("is_rename"), F.split_part(F.col("obj.name"), F.lit("."), F.lit(1))
-            ).alias("rename_to_db"),
-            F.when(
-                F.col("is_rename"), F.split_part(F.col("obj.name"), F.lit("."), F.lit(2))
-            ).alias("rename_to_table"),
+            "coalesce(split_part(from_obj.name, '.', 1),"
+            " split_part(obj.name, '.', 1)) AS db",
+            "coalesce(split_part(from_obj.name, '.', 2),"
+            " split_part(obj.name, '.', 2)) AS `table`",
+            "CAST(array() AS array<string>) AS partition_names",
+            "CASE WHEN is_rename THEN split_part(obj.name, '.', 1) END"
+            " AS rename_to_db",
+            "CASE WHEN is_rename THEN split_part(obj.name, '.', 2) END"
+            " AS rename_to_table",
         )
     )
 
     # --- partition-level jobs, dynamic-partition batched ------------------
     # 'db.table/ds=1/hr=2' → table part + partition part
-    pname = F.regexp_extract(F.col("obj.name"), r"^[^/]+/(.*)$", 1)
-    ptable = F.regexp_extract(F.col("obj.name"), r"^([^/]+)/", 1)
+    ptable = "regexp_extract(obj.name, '^([^/]+)/', 1)"
     part_rows = (
-        base.filter((F.size("out_parts") > 0) & ~F.col("is_exchange"))
-        .select("id", "is_drop_part", F.explode("out_parts").alias("obj"))
-        .select(
+        base.where("size(out_parts) > 0 AND NOT is_exchange")
+        .selectExpr("id", "is_drop_part", "explode(out_parts) AS obj")
+        .selectExpr(
             "id",
             "is_drop_part",
-            F.split_part(ptable, F.lit("."), F.lit(1)).alias("db"),
-            F.split_part(ptable, F.lit("."), F.lit(2)).alias("table"),
-            pname.alias("partition_name"),
+            f"split_part({ptable}, '.', 1) AS db",
+            f"split_part({ptable}, '.', 2) AS `table`",
+            "regexp_extract(obj.name, '^[^/]+/(.*)$', 1) AS partition_name",
         )
     )
     part_jobs = (
         part_rows.groupBy("id", "is_drop_part", "db", "table")
-        .agg(F.array_sort(F.collect_list("partition_name")).alias("partition_names"))
-        .select(
-            F.col("id").alias("src_event_id"),
-            F.when(F.col("is_drop_part"), "DROP_PARTITION")
-            .when(F.size("partition_names") > 1, "COPY_PARTITIONS")  # ST5 dyn-part batch
-            .otherwise("COPY_PARTITION")
-            .alias("operation"),
+        .agg(F.expr("array_sort(collect_list(partition_name)) AS partition_names"))
+        .selectExpr(
+            "id AS src_event_id",
+            "CASE WHEN is_drop_part THEN 'DROP_PARTITION'"
+            " WHEN size(partition_names) > 1 THEN 'COPY_PARTITIONS'"  # ST5 dyn-part batch
+            " ELSE 'COPY_PARTITION' END AS operation",
             "db",
-            "table",
+            "`table`",
             "partition_names",
-            F.lit(None).cast("string").alias("rename_to_db"),
-            F.lit(None).cast("string").alias("rename_to_table"),
+            "CAST(NULL AS STRING) AS rename_to_db",
+            "CAST(NULL AS STRING) AS rename_to_table",
         )
     )
 
     # --- exchange-partition workaround (X7) -------------------------------
-    ex_jobs = base.filter(F.col("is_exchange")).select(
-        F.col("id").alias("src_event_id"),
-        F.lit("COPY_PARTITION").alias("operation"),
-        F.split_part(F.regexp_extract("command", EXCHANGE_RE, 3), F.lit("."), F.lit(1)).alias("db"),
-        F.split_part(F.regexp_extract("command", EXCHANGE_RE, 3), F.lit("."), F.lit(2)).alias("table"),
-        F.array(
-            F.regexp_replace(
-                F.regexp_replace(F.regexp_extract("command", EXCHANGE_RE, 2), r"\s*,\s*", "/"),
-                r"\s*=\s*'?([^',/]+)'?",
-                "=$1",
-            )
-        ).alias("partition_names"),
-        F.lit(None).cast("string").alias("rename_to_db"),
-        F.lit(None).cast("string").alias("rename_to_table"),
+    def exchange_group(i: int) -> str:
+        return f"regexp_extract(command, {sql_str(EXCHANGE_RE)}, {i})"
+
+    ex_jobs = base.where("is_exchange").selectExpr(
+        "id AS src_event_id",
+        "'COPY_PARTITION' AS operation",
+        f"split_part({exchange_group(3)}, '.', 1) AS db",
+        f"split_part({exchange_group(3)}, '.', 2) AS `table`",
+        "array(regexp_replace(regexp_replace("
+        f"{exchange_group(2)}, {sql_str(SPEC_SEP_RE)}, '/'),"
+        f" {sql_str(SPEC_KV_RE)}, '=$1')) AS partition_names",
+        "CAST(NULL AS STRING) AS rename_to_db",
+        "CAST(NULL AS STRING) AS rename_to_table",
     )
 
     jobs = table_jobs.unionByName(part_jobs).unionByName(ex_jobs)
-    return jobs.withColumn(
-        "job_id",
-        F.col("src_event_id") * 1000
-        + F.pmod(F.xxhash64("operation", "db", "table"), F.lit(1000)),
-    ).withColumn("status", F.lit("PENDING"))
+    return jobs.selectExpr(
+        "*",
+        "src_event_id * 1000 + pmod(xxhash64(operation, db, `table`), 1000)"
+        " AS job_id",
+        "'PENDING' AS status",
+    )
 
 
 def _execute_rename(src_cat, dest_cat, job) -> None:

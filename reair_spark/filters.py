@@ -16,6 +16,12 @@ from pyspark.sql import functions as F
 NON_REPLICATING_COMMANDS = ("SHOWTABLES", "SHOWPARTITIONS", "SWITCHDATABASE")
 
 
+def sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal: backslashes first (regexes
+    are full of them), then quotes."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def blacklist_predicate(pairs: list[tuple[str, str]]) -> Column:
     """True for rows matching any (db_regex, table_regex) pair —
     full-match semantics like Java's String.matches.
@@ -30,13 +36,9 @@ def blacklist_predicate(pairs: list[tuple[str, str]]) -> Column:
     if not pairs:
         return F.lit(False)
 
-    def q(s: str) -> str:
-        # SQL string-literal escaping: backslashes first (regexes from
-        # re.escape are full of them), then quotes
-        return s.replace("\\", "\\\\").replace("'", "\\'")
-
     terms = [
-        f"(db RLIKE '^(?:{q(d)})$' AND `table` RLIKE '^(?:{q(t)})$')"
+        f"(db RLIKE {sql_str(f'^(?:{d})$')}"
+        f" AND `table` RLIKE {sql_str(f'^(?:{t})$')})"
         for d, t in pairs
     ]
     return F.expr(" OR ".join(terms))
@@ -60,7 +62,7 @@ def apply_regex_filters(
 def replicating_commands(events: DataFrame) -> DataFrame:
     """Drop non-replicating command types + entries without outputs
     (F4; ReplicationJobFactory.java:576-583)."""
+    skipped = ", ".join(sql_str(c) for c in NON_REPLICATING_COMMANDS)
     return events.filter(
-        ~F.col("command_type").isin(*NON_REPLICATING_COMMANDS)
-        & (F.size(F.col("objects")) > 0)
+        f"command_type NOT IN ({skipped}) AND size(objects) > 0"
     )

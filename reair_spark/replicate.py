@@ -209,36 +209,28 @@ def _replicate_warehouse(
         )
         plan = rewrite_locations(plan, src_root, dest_root)
 
-        # serialized src payloads + dest TLDT (CAS guard) ride with the plan
-        t_payload = src_t.select(
-            "db", "table", F.lit(None).cast("string").alias("partition_name"),
-            F.to_json(F.struct("db", "table", "table_type", "cols", "partition_keys",
-                               "serde", "parameters")).alias("payload"),
+        # serialized src payloads + dest TLDT (CAS guard) ride with the
+        # plan; NULL partition_name (table-level rows) never equi-joins
+        # — a sentinel key attaches them to table rows too
+        table_key = "'\\u0000' AS pn_key"
+        pn_key = "coalesce(partition_name, '\\u0000') AS pn_key"
+        payloads = src_t.selectExpr(
+            "db", "`table`", table_key,
+            "to_json(struct(db, `table`, table_type, cols, partition_keys,"
+            " serde, parameters)) AS payload",
+        ).union(src_p.selectExpr(
+            "db", "`table`", pn_key,
+            "to_json(struct(partition_name, `values`, parameters)) AS payload",
+        ))
+        tldt = "element_at(parameters, 'transient_lastDdlTime') AS expected_tldt"
+        dest_tldt = dest_t.selectExpr("db", "`table`", table_key, tldt).union(
+            dest_p.selectExpr("db", "`table`", pn_key, tldt)
         )
-        p_payload = src_p.select(
-            "db", "table", "partition_name",
-            F.to_json(F.struct("partition_name", "values", "parameters")).alias("payload"),
-        )
-        payloads = t_payload.union(p_payload)
-        dest_tldt = dest_t.select(
-            "db", "table", F.lit(None).cast("string").alias("partition_name"),
-            F.element_at("parameters", "transient_lastDdlTime").alias("expected_tldt"),
-        ).union(
-            dest_p.select(
-                "db", "table", "partition_name",
-                F.element_at("parameters", "transient_lastDdlTime").alias("expected_tldt"),
-            )
-        )
-        # NULL partition_name (table-level rows) never equi-joins — use a
-        # sentinel key so payloads attach to table rows too
-        pn_key = F.coalesce(F.col("partition_name"), F.lit("\x00"))
         plan = (
-            plan.withColumn("pn_key", pn_key)
-            .join(payloads.withColumn("pn_key", pn_key).drop("partition_name"),
-                  ["db", "table", "pn_key"], "left")
-            .join(dest_tldt.withColumn("pn_key", pn_key).drop("partition_name"),
-                  ["db", "table", "pn_key"], "left")
-            .select(*PLAN_COLUMNS, "payload", "expected_tldt")
+            plan.selectExpr("*", pn_key)
+            .join(payloads, ["db", "table", "pn_key"], "left")
+            .join(dest_tldt, ["db", "table", "pn_key"], "left")
+            .selectExpr(*[f"`{c}`" for c in PLAN_COLUMNS], "payload", "expected_tldt")
         )
 
     if empty_snapshot:
@@ -279,7 +271,7 @@ def _replicate_warehouse(
     # it skips is ~1 s of plan-build py4j (task join, LPT sizing, skew
     # rebalance) spent provably producing zero tasks.
     has_copies = (not empty_snapshot) and plan.where(
-        F.col("action").startswith("COPY") & F.col("update_data")
+        "startswith(action, 'COPY') AND update_data"
     ).limit(1).count() > 0
     if has_copies:
         tasks = plan_copy_tasks(plan, inv)
