@@ -129,8 +129,9 @@ def _diff(
         "coalesce(s.present, false) AS src_exists",
         "coalesce(d.present, false) AS dest_exists",
         f"{_meta_cmp_sql('s', kind)} = {_meta_cmp_sql('d', kind)} AS meta_equal",
-        "s.data_digest IS NOT NULL AND s.data_digest = d.data_digest"
-        " OR s.data_digest IS NULL AND d.data_digest IS NULL AS data_equal",
+        # null-safe: a digest on one side only is unequal data, never
+        # NULL (a NULL fell through the ladder to a no-op COPY)
+        "s.data_digest <=> d.data_digest AS data_equal",
         f"{copies_data} AS copies_data",
         f"{_tldt_sql('d')} > {_tldt_sql('s')} AS dest_is_newer",
         f"{copy_action} AS copy_action",

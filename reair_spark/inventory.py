@@ -244,10 +244,3 @@ def dirs_equal(spark: SparkSession, a: str, b: str, check_mtime: bool = False) -
          for r in dir_digest(inv, check_mtime).collect()}
     return d.get(a, (0, 0, 0)) == d.get(b, (0, 0, 0))
 
-
-def extras_on_dest(src_files: DataFrame, dest_files: DataFrame) -> DataFrame:
-    """Files present on dest but not src — the distcp -update gate
-    (FsUtils.filesExistOnDestButNotSrc:246-268) as a left-anti join."""
-    return dest_files.select("rel_path").join(
-        src_files.select("rel_path"), "rel_path", "left_anti"
-    )

@@ -42,12 +42,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:
-    """Register temp views so SQL-form operators can reference them."""
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def rows_df(
     spark: SparkSession,
     rows,

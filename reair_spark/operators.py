@@ -394,46 +394,6 @@ def zorder_key(cols: list[Column], bits: int = 16) -> Column:
     return out
 
 
-def blocked_fuzzy_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_col: str,
-    right_col: str,
-    block,
-    max_dist: int = 1,
-) -> DataFrame:
-    """Blocked approximate-string join (the entity-resolution
-    workhorse): equi-join on a cheap blocking key, then an exact
-    edit-distance filter inside each block. Emits every (left, right)
-    pair with levenshtein <= max_dist as a `dist` column alongside
-    both sides' columns.
-
-    The all-pairs cross product never materializes — candidate volume
-    is Σ_b |L_b|·|R_b| over blocks (the classic blocking bound), and
-    both the length-band prune and the levenshtein filter evaluate
-    JVM-side inside the join stage, so a 100 TB match run shuffles
-    each side once on the block key and nothing else. Recall is the
-    blocking function's contract: `block` must be edit-invariant for
-    the edits you want to catch (e.g. a first-2-chars prefix catches
-    any single edit at position >= 3).
-    """
-    lb = left.withColumn("__blk", block(F.col(left_col)))
-    rb = right.withColumn("__blk", block(F.col(right_col)))
-    return (
-        lb.join(
-            rb,
-            (lb["__blk"] == rb["__blk"])
-            & (
-                F.abs(F.length(F.col(left_col)) - F.length(F.col(right_col)))
-                <= max_dist
-            ),
-        )
-        .withColumn("dist", F.levenshtein(F.col(left_col), F.col(right_col)))
-        .where(F.col("dist") <= max_dist)
-        .drop("__blk")
-    )
-
-
 def deletion_neighborhood_join(
     left: DataFrame,
     right: DataFrame,

@@ -360,16 +360,9 @@ PUBMAP_FOLD_AT = 8
 
 
 def _pubmap_delta_ids(location: str) -> list[int]:
-    from reair_spark.fs import fs_for
-    from reair_spark.sources import PUBMAP_DIR, _scandir_or_empty
+    from reair_spark.sources import PUBMAP_DIR, _delta_ids
 
-    loc = location.rstrip("/")
-    return sorted(
-        int(e.name.split("=", 1)[1])
-        for e in _scandir_or_empty(fs_for(loc), f"{loc}/{PUBMAP_DIR}")
-        if e.is_dir and e.name.startswith("ingest=")
-        and e.name.split("=", 1)[1].isdigit()
-    )
+    return list(_delta_ids(location, PUBMAP_DIR))
 
 
 def _pubmap_read(spark: SparkSession, location: str) -> DataFrame | None:
@@ -410,7 +403,11 @@ def _pubmap_append(
     import uuid
 
     from reair_spark.fs import fs_for, fs_rmtree, fs_spark_path
-    from reair_spark.sources import PUBMAP_DIR, _scandir_or_empty
+    from reair_spark.sources import (
+        PUBMAP_DIR,
+        _probe_claim,
+        _scandir_or_empty,
+    )
 
     loc = location.rstrip("/")
     pm = f"{loc}/{PUBMAP_DIR}"
@@ -420,14 +417,8 @@ def _pubmap_append(
         if e.name.startswith(".tmp_") or e.name.startswith(".old_"):
             fs_rmtree(fs, e.path) if e.is_dir else fs.unlink(e.path)
     ids = _pubmap_delta_ids(loc)
-    cand = (max(ids) + 1) if ids else 0
-    while True:
-        try:
-            fh = fs.create_exclusive(f"{pm}/.claim-{cand}")
-            fh.close()
-            break
-        except FileExistsError:
-            cand += 1
+    cand = _probe_claim(fs, lambda i: f"{pm}/.claim-{i}",
+                        (max(ids) + 1) if ids else 0)
     staged = f"{pm}/.tmp_{uuid.uuid4().hex[:8]}"
     delta.write.mode("overwrite").parquet(fs_spark_path(staged))
     fs.rename(staged, f"{pm}/ingest={cand}")
@@ -615,6 +606,7 @@ def _publish_zonemap_incremental_core(
     from pyspark.sql import functions as F
 
     from reair_spark.sources import (
+        _bucket_values,
         _meta_cas_update,
         _read_layout_meta,
         read_location,
@@ -747,12 +739,8 @@ def _publish_zonemap_incremental_core(
         src.where(pname_expr.isin(changed))
         if changed else src.where(F.lit(False))
     )
-    new_buckets = {
-        x[0] for x in changed_src_rows.select(
-            F.col(bucket_col).cast("string")
-        ).distinct().collect()
-    }
-    affected = set(new_buckets) | rec_buckets
+    affected = set(_bucket_values(changed_src_rows, bucket_col)) \
+        | rec_buckets
     co_read = _pubmap_co_read(j, unchanged, affected)
     scope = sorted(set(changed) | set(co_read))
     scope_rows = with_bucket(

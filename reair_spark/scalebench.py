@@ -568,32 +568,6 @@ FROM ids WHERE id % 10 IN (0, 1, 2)
 """
 
 
-def measure_file_scale(
-    spark: SparkSession, sizes: tuple[int, ...] = (1_000_000, 10_000_000)
-) -> list[dict]:
-    """Wall + Spark-job counts for the file pipeline at each size —
-    the PLANS.md 1×/10×/100× evidence table (same jobs-per-group
-    method as measure_scale)."""
-    sc = spark.sparkContext
-    out = []
-    for n in sizes:
-        group = f"filescale-{n}"
-        sc.setJobGroup(group, f"file scale study n={n}")
-        t0 = time.time()
-        rows = file_scale_pipeline(spark, n).collect()
-        wall = time.time() - t0
-        sc.setJobGroup("", "")
-        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-        out.append({
-            "n_files": n,
-            "wall_s": round(wall, 2),
-            "spark_jobs": jobs,
-            "digest_rows": len(rows),
-            "plan_rows": sum(r.n for r in rows if r.stage == "plan"),
-        })
-    return out
-
-
 # ---------------------------------------------------------------------------
 # zone-map scan PLANNING at scale: a million-bucket manifest is the
 # metadata of a ~10M-file clustered table; the planner (sources.
@@ -676,34 +650,6 @@ SELECT (SELECT count(*)::BIGINT FROM b) AS n_buckets_total,
        (SELECT count(*)::BIGINT FROM k) AS n_buckets_read,
        (SELECT sum(nr)::BIGINT FROM k) AS n_rows_scanned
 """
-
-
-def zonemap_measure_scale(
-    spark: SparkSession, sizes: tuple[int, ...] = (100_000, 1_000_000)
-) -> list[dict]:
-    """Wall + Spark-job counts for planning at each manifest size —
-    the PLANS.md evidence table (same jobs-per-group method as
-    measure_scale). Kept-bucket collection grows with SELECTIVITY,
-    not manifest size — the honest driver cost every table format
-    pays at plan time."""
-    sc = spark.sparkContext
-    out = []
-    for n in sizes:
-        synthetic_zonemap_manifest(spark, n)  # build outside the timer
-        group = f"zmscale-{n}"
-        sc.setJobGroup(group, f"zonemap plan scale n={n}")
-        t0 = time.time()
-        stats = zonemap_plan_scale(spark, n)
-        wall = time.time() - t0
-        sc.setJobGroup("", "")
-        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-        out.append({
-            "n_buckets": n,
-            "wall_s": round(wall, 2),
-            "spark_jobs": jobs,
-            **stats,
-        })
-    return out
 
 
 # ---------------------------------------------------------------------
@@ -848,118 +794,6 @@ SELECT CAST({n} AS BIGINT) AS n_buckets_total,
 """
 
 
-def merge_measure_scale(
-    spark: SparkSession, sizes: tuple[int, ...] = (100_000, 1_000_000)
-) -> list[dict]:
-    """Wall + Spark-job counts for the SAME k-bucket merge+delete at
-    each manifest width — the PLANS.md evidence that mutation cost is
-    flat in table size (the bucket-scoped copy-on-write claim made
-    measurable)."""
-    sc = spark.sparkContext
-    out = []
-    for n in sizes:
-        synthetic_merge_layout(spark, n)  # template outside the timer
-        group = f"mergescale-{n}"
-        sc.setJobGroup(group, f"merge/delete scale n={n}")
-        t0 = time.time()
-        r = merge_scale_scenario(spark, n)
-        wall = time.time() - t0
-        sc.setJobGroup("", "")
-        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-        out.append({
-            "n_buckets": n, "wall_s": round(wall, 2),
-            "spark_jobs": jobs, **r,
-        })
-    return out
-
-
-# ---------------------------------------------------------------------
-# manifest FOLD at scale (VERDICT r11 ask #1 done-criterion): plan
-# cost over a many-delta manifest before vs after rewrite_manifests —
-# the study that shows the per-ingest delta-read growth gone without
-# any data rewrite.
-# ---------------------------------------------------------------------
-
-def synthetic_multidelta_layout(
-    spark: SparkSession, n_deltas: int, buckets_per_delta: int = 512
-) -> str:
-    """A descriptor-bearing layout (real seed write) plus
-    ``n_deltas − 1`` range-generated manifest deltas, each adding its
-    own disjoint bucket range with closed-form zones — the metadata
-    shape of a streaming table after n_deltas micro-batches. Phantom
-    buckets carry no data dirs (legal: plans only open KEPT buckets,
-    and the study's predicate stays inside the seed zones when it
-    scans). Zero createDataFrame rows."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from reair_spark.sources import write_zonemapped
-
-    base = tempfile.mkdtemp(prefix="reair_foldscale_")
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    loc = f"{base}/layout"
-    seed = spark.range(20).select(
-        F.col("id").alias("k"), F.col("id").alias("v"),
-        (F.col("id") / 10).cast("long").cast("string").alias("bucket"),
-    )
-    write_zonemapped(seed, loc, "bucket", stat_cols=["v"])
-    for i in range(1, n_deltas):
-        lo = i * buckets_per_delta
-        (
-            spark.range(lo, lo + buckets_per_delta)
-            .select(
-                F.col("id").cast("string").alias("bucket"),
-                ((F.col("id") % 97) + 1).cast("long").alias("n_rows"),
-                (F.col("id") * 10).alias("min_v"),
-                (F.col("id") * 10 + 9).alias("max_v"),
-                F.lit(0).cast("long").alias("n_nulls_v"),
-                F.lit(False).alias("replaces"),
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{loc}/manifest/ingest={i}")
-        )
-    return loc
-
-
-def fold_measure_scale(
-    spark: SparkSession, delta_counts: tuple[int, ...] = (64, 256)
-) -> list[dict]:
-    """Plan wall over the many-delta manifest BEFORE and AFTER the
-    manifest-only fold, plus the fold's own cost — the PLANS.md
-    evidence that rewrite_manifests removes the per-ingest delta-read
-    growth while data/ stays untouched."""
-    from reair_spark.sources import zonemap_plan, zonemap_rewrite_manifests
-
-    out = []
-    for k in delta_counts:
-        loc = synthetic_multidelta_layout(spark, k)
-        pred = [("v", 5, 95)]  # inside the seed zones
-
-        t0 = time.time()
-        _, _, before = zonemap_plan(spark, loc, predicates=pred)
-        t_before = time.time() - t0
-
-        t0 = time.time()
-        fold = zonemap_rewrite_manifests(spark, loc)
-        t_fold = time.time() - t0
-
-        t0 = time.time()
-        _, _, after = zonemap_plan(spark, loc, predicates=pred)
-        t_after = time.time() - t0
-        assert after == before, (before, after)
-        out.append({
-            "n_deltas": k,
-            "plan_s_before": round(t_before, 2),
-            "fold_s": round(t_fold, 2),
-            "plan_s_after": round(t_after, 2),
-            "deltas_after": fold["deltas_after"],
-            "n_buckets_total": before["n_buckets_total"],
-        })
-    return out
-
-
 # ---------------------------------------------------------------------
 # merge-on-read mutations at scale: the SAME upsert + positional
 # delete over a 100k-bucket manifest — the harness proof that MOR
@@ -1069,31 +903,6 @@ SELECT CAST({n} AS BIGINT) AS n_buckets_total,
        (SELECT count(*)::BIGINT FROM final) AS n_rows,
        (SELECT sum(v)::BIGINT FROM final) AS sum_v
 """
-
-
-def mor_measure_scale(
-    spark: SparkSession, sizes: tuple[int, ...] = (100_000, 1_000_000)
-) -> list[dict]:
-    """Wall + Spark-job counts for the SAME merge-on-read upsert +
-    positional delete at each manifest width — the PLANS.md evidence
-    that MOR mutation cost is flat in table size AND cheaper-shaped
-    than the COW twin (no bucket rewrite in the job list)."""
-    sc = spark.sparkContext
-    out = []
-    for n in sizes:
-        synthetic_merge_layout(spark, n)  # template outside the timer
-        group = f"morscale-{n}"
-        sc.setJobGroup(group, f"mor upsert/delete scale n={n}")
-        t0 = time.time()
-        r = mor_scale_scenario(spark, n)
-        wall = time.time() - t0
-        sc.setJobGroup("", "")
-        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-        out.append({
-            "n_buckets": n, "wall_s": round(wall, 2),
-            "spark_jobs": jobs, **r,
-        })
-    return out
 
 
 # ---------------------------------------------------------------------

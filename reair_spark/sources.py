@@ -12,6 +12,37 @@ re-publishing one partition never clobbers its siblings).
 Everything here stays declarative: format choice is a reader option,
 so Catalyst keeps pushdown/pruning wherever the format supports it
 (parquet/orc pushdown; csv/json get column pruning only).
+
+Commit protocol of the zone-mapped table format (the Delta Lake /
+Iceberg optimistic loser-retries shape). Every mutator — merge,
+merge-on-read upsert, delete-by-key, overwrite, replace_buckets and
+both delete modes — opens the layout with :func:`_open_layout`
+(normalized path, crash recovery, descriptor or refusal) and commits
+through :func:`_optimistic_commit`:
+
+1. snapshot the committed delta ids of both delta trees
+   (:func:`_commit_snapshot`);
+2. ``plan()`` — every decision that reads layout state (affected
+   buckets, tombstones, the rows to rewrite) is made here, so a retry
+   re-decides it from fresh state;
+3. claim a fresh ingest id (:func:`_claim_ingest_id`, an
+   exclusive-create claim file: racing writers never share an id);
+4. re-snapshot; if any delta landed since step 1, go back to step 1
+   (bounded at :data:`_COMMIT_ATTEMPTS`, then refused — serialize
+   writers with the per-table FIFO);
+5. ``commit(plan, ingest_id)`` — write data and delete files, update
+   the descriptor through its version-file CAS
+   (:func:`_meta_cas_update`), then publish the manifest delta
+   (:func:`_publish_delta`): the delta rename is the commit point.
+
+A pinned ingest id (streaming replay, where the batch id IS the
+commit's identity) skips the loop and commits once. The window
+between the re-snapshot and the delta publish is the honest limit of
+a filesystem without conditional writes; an object-store backend
+closes it with a conditional PUT (cf. ``ArrowFs.create_exclusive``).
+Commit totals come from the publish-time ``observe()`` metrics
+(:func:`_observed_totals`) or one metadata-sized readback of the
+delta (:func:`_delta_row`).
 """
 
 from __future__ import annotations
@@ -542,18 +573,27 @@ def _meta_cas_update(location: str, mutate):
         return new
 
 
-def _manifest_delta_ids(location: str) -> tuple[int, ...]:
-    """Sorted manifest delta ids — the commit-visibility snapshot the
-    optimistic mutations validate against."""
+def _delta_ids(location: str, subdir: str) -> tuple[int, ...]:
+    """Sorted ids of the ``ingest=<k>`` directories under
+    ``<location>/<subdir>`` — the one parse of the tree naming every
+    id listing shares (manifest, dmanifest, data, delete trees, the
+    publish-watermark side table). Debris names such as
+    ``ingest=<k>_.tmp_*`` are not ids."""
     from reair_spark.fs import fs_for
 
     loc = location.rstrip("/")
     return tuple(sorted(
         int(e.name.split("=", 1)[1])
-        for e in _scandir_or_empty(fs_for(loc), f"{loc}/manifest")
-        if e.name.startswith("ingest=")
+        for e in _scandir_or_empty(fs_for(loc), f"{loc}/{subdir}")
+        if e.is_dir and e.name.startswith("ingest=")
         and e.name.split("=", 1)[1].isdigit()
     ))
+
+
+def _manifest_delta_ids(location: str) -> tuple[int, ...]:
+    """Sorted manifest delta ids — the commit-visibility snapshot the
+    optimistic mutations validate against."""
+    return _delta_ids(location, "manifest")
 
 
 _MERGE_WIDTH_BYTES = 40 * 1024  # manifest bytes per merge partition
@@ -589,15 +629,7 @@ def _dmanifest_delta_ids(location: str) -> tuple[int, ...]:
     pre-MOR-delete read would silently RESURRECT the deleted rows (its
     replacing delta supersedes the DV), so every optimistic mutation
     must notice DV commits exactly as it notices data commits."""
-    from reair_spark.fs import fs_for
-
-    loc = location.rstrip("/")
-    return tuple(sorted(
-        int(e.name.split("=", 1)[1])
-        for e in _scandir_or_empty(fs_for(loc), f"{loc}/{DMANIFEST_DIR}")
-        if e.name.startswith("ingest=")
-        and e.name.split("=", 1)[1].isdigit()
-    ))
+    return _delta_ids(location, DMANIFEST_DIR)
 
 
 def _commit_snapshot(location: str) -> tuple[tuple[int, ...], tuple[int, ...]]:
@@ -620,17 +652,110 @@ def _claim_ingest_id(location: str) -> int:
     from reair_spark.fs import fs_for
 
     loc = location.rstrip("/")
-    fs = fs_for(loc)
-    cand = _next_ingest_id(loc)  # already counts pending claims
+    return _probe_claim(
+        fs_for(loc), lambda i: f"{loc}/_staging/claims/ingest-{i}",
+        _next_ingest_id(loc),  # already counts pending claims
+    )
+
+
+def _probe_claim(fs, claim_path, cand: int) -> int:
+    """Exclusive-create ``claim_path(cand)``, probing upward past ids a
+    racing writer already holds; returns the id this call now owns."""
     while True:
         try:
-            fh = fs.create_exclusive(
-                f"{loc}/_staging/claims/ingest-{cand}"
-            )
-            fh.close()
+            fs.create_exclusive(claim_path(cand)).close()
             return cand
         except FileExistsError:
             cand += 1
+
+
+#: optimistic commit attempts before a mutation is refused under
+#: sustained concurrent writes (the commit protocol, module docstring)
+_COMMIT_ATTEMPTS = 5
+
+
+def _optimistic_commit(loc: str, op: str, commit, plan=lambda: (),
+                       ingest_id: int | None = None):
+    """The commit protocol of the module docstring, shared by every
+    mutator: per attempt, snapshot the delta ids, ``plan()``, claim an
+    id, re-snapshot, and return ``commit(planned, ingest_id)`` only if
+    no commit landed in between — otherwise re-plan from fresh state.
+    ``plan()`` returning None means there is nothing to commit: no id
+    is claimed and the call returns None. A pinned ``ingest_id``
+    (streaming replay) plans and commits once, unvalidated.
+
+    ``_commit_snapshot`` and ``_claim_ingest_id`` are looked up at
+    call time, so tests can interleave a concurrent writer."""
+    if ingest_id is not None:
+        return commit(plan(), int(ingest_id))
+    for _attempt in range(_COMMIT_ATTEMPTS):
+        base = _commit_snapshot(loc)
+        planned = plan()
+        if planned is None:
+            return None
+        iid = _claim_ingest_id(loc)
+        if _commit_snapshot(loc) == base:
+            return commit(planned, iid)
+    raise RuntimeError(
+        f"{op} on {loc}: commit validation failed {_COMMIT_ATTEMPTS} "
+        "times under concurrent writes — serialize writers (per-table "
+        "FIFO)"
+    )
+
+
+def _require_meta(loc: str, op: str) -> dict:
+    """The layout descriptor, or the refusal every descriptor-bearing
+    operation gives when it is absent."""
+    meta = _read_layout_meta(loc)
+    if meta is None:
+        raise ValueError(f"{loc} has no {LAYOUT_META}; {op} needs a "
+                         "descriptor-bearing layout")
+    return meta
+
+
+def _open_layout(location: str, op: str) -> tuple[str, dict]:
+    """Entry prologue of the descriptor-bearing operations: the
+    normalized path, crash recovery (:func:`_recover_layout`), then
+    the descriptor or the refusal."""
+    loc = location.rstrip("/")
+    _recover_layout(loc)
+    return loc, _require_meta(loc, op)
+
+
+def _with_clustering(df: DataFrame, meta: dict, what: str,
+                     bucket_expr: str | None = None):
+    """``(bucket_col, df)`` with the layout's clustering column on
+    ``df``: derived (hidden partitioning — the same expression every
+    append applies) from ``bucket_expr``, else the recorded one, when
+    ``df`` lacks it; refused when there is nothing to derive it from.
+    Mutators that prune by bucket rely on the column being
+    functionally dependent on their keys."""
+    from pyspark.sql import functions as F
+
+    bucket_col = meta["bucket_col"]
+    if bucket_col not in df.columns:
+        derive = (bucket_expr if bucket_expr is not None
+                  else meta.get("bucket_expr"))
+        if not derive:
+            raise ValueError(
+                f"{what} must carry the clustering column "
+                f"{bucket_col!r} (or the layout must record a "
+                "bucket_expr)"
+            )
+        df = df.withColumn(bucket_col, F.expr(derive))
+    return bucket_col, df
+
+
+def _bucket_values(df: DataFrame, bucket_col: str) -> list:
+    """Distinct clustering values of ``df`` in the manifest's string
+    form — one metadata-sized collect."""
+    from pyspark.sql import functions as F
+
+    return [
+        r[0] for r in df.select(
+            F.col(bucket_col).cast("string")
+        ).distinct().collect()
+    ]
 
 
 #: Whole-layout writer lease TTL (seconds): how long a lease may sit
@@ -1544,12 +1669,7 @@ def zonemap_compact(
             f"{meta['staged_ingests']} — publish or abort them first"
         )
     with _LayoutWriterLease(loc, "compact"):
-        delta_ids = [
-            int(e.name.split("=", 1)[1])
-            for e in fs.scandir(f"{loc}/manifest")
-            if e.name.startswith("ingest=")
-            and e.name.split("=", 1)[1].isdigit()
-        ]
+        delta_ids = list(_manifest_delta_ids(loc))
         deltas_before = len(delta_ids)
         # DV ingest ids count toward the replay high-water mark too:
         # the swap folds the delete files into the data and drops both
@@ -1632,14 +1752,7 @@ def zonemap_compact_buckets(
     needed.
 
     Returns {"n_buckets_compacted", "n_rows", "ingest_id"}."""
-    from pyspark.sql import functions as F
-
-    loc = location.rstrip("/")
-    _recover_layout(loc)
-    meta = _read_layout_meta(loc)
-    if meta is None:
-        raise ValueError(f"{loc} has no {LAYOUT_META}; targeted "
-                         "compaction needs a descriptor-bearing layout")
+    loc, meta = _open_layout(location, "targeted compaction")
     if (buckets is None) == (predicates is None):
         raise ValueError("pass exactly one of buckets= or predicates=")
     serde = meta["serde"]
@@ -1702,13 +1815,8 @@ def zonemap_recluster(
 
     from reair_spark.fs import fs_for, fs_rmtree
 
-    loc = location.rstrip("/")
+    loc, meta = _open_layout(location, "recluster")
     fs = fs_for(loc)
-    _recover_layout(loc)
-    meta = _read_layout_meta(loc)
-    if meta is None:
-        raise ValueError(f"{loc} has no {LAYOUT_META}; recluster needs "
-                         "a descriptor-bearing layout")
     if meta.get("tags") or {}:
         raise ValueError(
             f"zonemap_recluster on {loc} starts a new table "
@@ -1722,12 +1830,7 @@ def zonemap_recluster(
             f"{meta['staged_ingests']} — publish or abort them first"
         )
     with _LayoutWriterLease(loc, "recluster"):
-        delta_ids = [
-            int(e.name.split("=", 1)[1])
-            for e in fs.scandir(f"{loc}/manifest")
-            if e.name.startswith("ingest=")
-            and e.name.split("=", 1)[1].isdigit()
-        ]
+        delta_ids = list(_manifest_delta_ids(loc))
         delta_ids += list(_dmanifest_delta_ids(loc))  # same as compact
         df, _ = zonemap_scan(spark, loc, serde=meta["serde"])
         df = df.drop("ingest")
@@ -1826,14 +1929,7 @@ def zonemap_rewrite_manifests(
 
     from reair_spark.fs import fs_for, fs_rmtree
 
-    loc = location.rstrip("/")
-    _recover_layout(loc)
-    meta = _read_layout_meta(loc)
-    if meta is None:
-        raise ValueError(
-            f"{loc} has no {LAYOUT_META}; rewrite_manifests needs a "
-            "descriptor-bearing layout"
-        )
+    loc, meta = _open_layout(location, "rewrite_manifests")
     serde = meta["serde"]
     fmt = SERDE_FORMATS.get(serde, serde)
     if fmt not in ("parquet", "orc"):
@@ -1848,15 +1944,10 @@ def zonemap_rewrite_manifests(
     with _LayoutWriterLease(loc, "fold"):
         staged_ids = {int(i)
                       for i in (meta.get("staged_ingests") or [])}
-        delta_ids = [
-            int(e.name.split("=", 1)[1])
-            for e in _scandir_or_empty(fs, f"{loc}/manifest")
-            if e.name.startswith("ingest=")
-            and e.name.split("=", 1)[1].isdigit()
-            # staged (write-audit-publish) deltas are not part of any
-            # snapshot yet: the fold neither absorbs nor removes them
-            and int(e.name.split("=", 1)[1]) not in staged_ids
-        ]
+        # staged (write-audit-publish) deltas are not part of any
+        # snapshot yet: the fold neither absorbs nor removes them
+        delta_ids = [i for i in _manifest_delta_ids(loc)
+                     if i not in staged_ids]
         if len(delta_ids) <= 1:
             return {"deltas_before": len(delta_ids),
                     "deltas_after": len(delta_ids), "fold_ingest": None}
@@ -2167,20 +2258,8 @@ def zonemap_orphan_ingests(location: str) -> list[int]:
     the append and the dynamic overwrite replaces the data in place).
     Directory-listing only — metadata-sized, the layout-level analogue
     of plans.orphan_gc_plan's file-level verdicts."""
-    from reair_spark.fs import fs_for
-
     loc = location.rstrip("/")
-    fs = fs_for(loc)
     _recover_layout(loc)
-
-    def ingests(sub: str) -> set[int]:
-        return {
-            int(e.name.split("=", 1)[1])
-            for e in _scandir_or_empty(fs, f"{loc}/{sub}")
-            if e.is_dir and e.name.startswith("ingest=")
-            and e.name.split("=", 1)[1].isdigit()
-        }
-
     # batches at or below the replay high-water mark are FOLDED, not
     # orphaned: after zonemap_rewrite_manifests their per-ingest delta
     # is gone by design while their data dirs stay live (referenced by
@@ -2189,7 +2268,8 @@ def zonemap_orphan_ingests(location: str) -> list[int]:
         "compacted_through", -1
     ))
     return sorted(
-        i for i in ingests("data") - ingests("manifest") if i > folded
+        i for i in set(_delta_ids(loc, "data"))
+        - set(_manifest_delta_ids(loc)) if i > folded
     )
 
 
@@ -2207,12 +2287,7 @@ def _next_ingest_id(location: str) -> int:
     ids = [int(meta.get("compacted_through", -1))]
     for sub in ("manifest", "data", DMANIFEST_DIR, DELETES_DIR,
                 EQ_DELETES_DIR):
-        ids += [
-            int(e.name.split("=", 1)[1])
-            for e in _scandir_or_empty(fs, f"{loc}/{sub}")
-            if e.is_dir and e.name.startswith("ingest=")
-            and e.name.split("=", 1)[1].isdigit()
-        ]
+        ids += _delta_ids(loc, sub)
     # ids RESERVED by in-flight writers (exclusive-create claims)
     # count too: a maintenance op (fold) must not mint an id a
     # concurrent mutation already owns
@@ -2264,52 +2339,19 @@ def zonemap_merge(
     between them — buckets collected from one evaluation, rows
     written from another (ADVICE r10).
 
-    Concurrency (optimistic, VERDICT r11 ask #2): the ingest id is
-    RESERVED via an exclusive-create claim at the fs seam
-    (:func:`_claim_ingest_id` — two racing writers can no longer mint
-    the same id), descriptor updates go through the version-file CAS
-    (:func:`_meta_cas_update`), and the commit validates that no new
-    manifest delta landed since this merge's snapshot was planned —
-    if one did, the whole merge RECOMPUTES from fresh state and
-    retries (bounded), the Iceberg loser-retries shape. The residual
-    window between validation and the delta publish is the honest
-    limit of a filesystem without conditional writes; strict
-    serialization remains the per-table FIFO (commit.py), and an
-    object-store backend closes the window with conditional PUT
-    (cf. ArrowFs.create_exclusive).
+    Concurrency: the commit protocol (module docstring) — a delta
+    landing while the merge plans makes it re-read the affected
+    buckets and recompute.
 
     Returns {"n_buckets_affected", "ingest_id"}."""
     from pyspark.sql import functions as F
 
-    loc = location.rstrip("/")
-    _recover_layout(loc)
-    meta = _read_layout_meta(loc)
-    if meta is None:
-        raise ValueError(f"{loc} has no {LAYOUT_META}; merge needs a "
-                         "descriptor-bearing layout")
-    bucket_col = meta["bucket_col"]
-    if bucket_col not in updates.columns:
-        if meta.get("bucket_expr"):
-            # hidden partitioning: derive the clustering value the
-            # same way every append does — functional dependence on
-            # the data columns is the expression itself
-            updates = updates.withColumn(
-                bucket_col, F.expr(meta["bucket_expr"])
-            )
-        else:
-            raise ValueError(
-                f"updates must carry the clustering column "
-                f"{bucket_col!r}"
-            )
+    loc, meta = _open_layout(location, "merge")
+    bucket_col, updates = _with_clustering(updates, meta, "updates")
     updates = updates.localCheckpoint(eager=True)
-    affected = [
-        r[0]
-        for r in updates.select(
-            F.col(bucket_col).cast("string")
-        ).distinct().collect()
-    ]
-    for _attempt in range(5):
-        base = _commit_snapshot(loc)
+    affected = _bucket_values(updates, bucket_col)
+
+    def plan():
         existing, _ = zonemap_scan(
             spark, loc, serde=meta["serde"], buckets=affected
         )
@@ -2320,10 +2362,9 @@ def zonemap_merge(
         survivors = existing.join(
             updates.select(*key_cols).distinct(), key_cols, "left_anti"
         )
-        merged = survivors.unionByName(updates.select(*existing.columns))
-        ingest_id = _claim_ingest_id(loc)
-        if _commit_snapshot(loc) != base:
-            continue  # a commit landed since planning: recompute
+        return survivors.unionByName(updates.select(*existing.columns))
+
+    def commit(merged, ingest_id):
         append_zonemapped(
             merged, loc, bucket_col, meta["stat_cols"],
             serde=meta["serde"],
@@ -2332,10 +2373,8 @@ def zonemap_merge(
         )
         return {"n_buckets_affected": len(affected),
                 "ingest_id": ingest_id}
-    raise RuntimeError(
-        f"zonemap_merge on {loc}: commit validation failed 5 times "
-        "under concurrent writes — serialize writers (per-table FIFO)"
-    )
+
+    return _optimistic_commit(loc, "zonemap_merge", commit, plan)
 
 
 def zonemap_upsert_mor(
@@ -2385,33 +2424,17 @@ def zonemap_upsert_mor(
     ``ingest_id`` pins the commit id for streaming replay
     (foreachBatch batch id — a replayed batch rewrites its own data
     dir, its own delete files, and its own delta: idempotent);
-    batch callers leave it None and get a claimed id with the same
-    optimistic validation as MERGE.
+    batch callers leave it None and commit through the commit
+    protocol (module docstring).
 
     Returns {"n_rows_upserted", "n_keys_masked", "ingest_id"}."""
     from pyspark.sql import functions as F
 
-    loc = location.rstrip("/")
-    _recover_layout(loc)
-    meta = _read_layout_meta(loc)
-    if meta is None:
-        raise ValueError(f"{loc} has no {LAYOUT_META}; upsert needs a "
-                         "descriptor-bearing layout")
-    bucket_col = meta["bucket_col"]
-    if bucket_col not in updates.columns:
-        if meta.get("bucket_expr"):
-            updates = updates.withColumn(
-                bucket_col, F.expr(meta["bucket_expr"])
-            )
-        else:
-            raise ValueError(
-                f"updates must carry the clustering column "
-                f"{bucket_col!r} (or the layout must record a "
-                "bucket_expr)"
-            )
+    loc, meta = _open_layout(location, "upsert")
+    bucket_col, updates = _with_clustering(updates, meta, "updates")
     updates = updates.localCheckpoint(eager=True)  # same pin as MERGE
 
-    def _commit(iid: int) -> dict:
+    def commit(_, iid: int) -> dict:
         append_zonemapped(
             updates, loc, bucket_col, meta["stat_cols"],
             serde=meta["serde"],
@@ -2420,37 +2443,19 @@ def zonemap_upsert_mor(
         )
         n_r, _ = _delta_totals(spark, loc, meta["serde"], bucket_col,
                                iid)
-        from reair_spark.fs import fs_spark_path
-
-        cached = _DELTA_TOTALS_CACHE.get((loc, "manifest", int(iid)))
-        if cached is not None and "n_eq_keys" in cached:
-            keys = int(cached["n_eq_keys"] or 0)
+        obs = _observed_totals(loc, iid, "n_eq_keys")
+        if obs is not None:
+            keys = obs["n_eq_keys"]
         else:
-            keys = _meta_row(
-                _delta_reader(
-                    _meta_spark(spark), loc, "manifest",
-                    SERDE_FORMATS.get(meta["serde"], meta["serde"]),
-                    (int(iid),), single=True, token=bucket_col,
-                )
-                .load(fs_spark_path(f"{loc}/manifest/ingest={iid}"))
-                .agg(F.coalesce(F.sum("n_eq_keys"), F.lit(0)))
+            keys = _delta_row(
+                spark, loc, "manifest", meta["serde"], iid, bucket_col,
+                F.coalesce(F.sum("n_eq_keys"), F.lit(0)),
             )[0]
         return {"n_rows_upserted": int(n_r),
-                "n_keys_masked": int(keys), "ingest_id": int(iid)}
+                "n_keys_masked": int(keys or 0), "ingest_id": int(iid)}
 
-    if ingest_id is not None:
-        # streaming replay path: the id IS the identity of the commit
-        return _commit(int(ingest_id))
-    for _attempt in range(5):
-        base = _commit_snapshot(loc)
-        iid = _claim_ingest_id(loc)
-        if _commit_snapshot(loc) != base:
-            continue
-        return _commit(iid)
-    raise RuntimeError(
-        f"zonemap_upsert_mor on {loc}: commit validation failed 5 "
-        "times under concurrent writes — serialize writers"
-    )
+    return _optimistic_commit(loc, "zonemap_upsert_mor", commit,
+                              ingest_id=ingest_id)
 
 
 def zonemap_delete_by_key(
@@ -2480,20 +2485,15 @@ def zonemap_delete_by_key(
     recorded equality-key set, counts on masked buckets demote to
     exact residual scans, and the change feed reports the erased
     rows as deletes via the commit's own key files. ``ingest_id``
-    pins the commit for streaming replay; batch callers get a
-    claimed id with optimistic validation.
+    pins the commit for streaming replay; batch callers commit
+    through the commit protocol (module docstring).
 
     Returns {"n_keys_deleted", "n_buckets_affected", "ingest_id"}."""
     from pyspark.sql import functions as F
 
     from reair_spark.fs import fs_spark_path
 
-    loc = location.rstrip("/")
-    _recover_layout(loc)
-    meta = _read_layout_meta(loc)
-    if meta is None:
-        raise ValueError(f"{loc} has no {LAYOUT_META}; delete-by-key "
-                         "needs a descriptor-bearing layout")
+    loc, meta = _open_layout(location, "delete-by-key")
     serde = _layout_serde(loc, meta["serde"])
     if SERDE_FORMATS.get(serde, serde) not in ("parquet", "orc"):
         raise ValueError(
@@ -2501,17 +2501,7 @@ def zonemap_delete_by_key(
             f"layout's serde is {serde!r} — use zonemap_delete "
             "(mode='cow')"
         )
-    bucket_col = meta["bucket_col"]
-    if bucket_col not in keys.columns:
-        if meta.get("bucket_expr"):
-            keys = keys.withColumn(bucket_col,
-                                   F.expr(meta["bucket_expr"]))
-        else:
-            raise ValueError(
-                f"keys must carry the clustering column "
-                f"{bucket_col!r} (or the layout must record a "
-                "bucket_expr)"
-            )
+    bucket_col, keys = _with_clustering(keys, meta, "keys")
     missing = [c for c in key_cols if c not in keys.columns]
     if missing:
         raise ValueError(f"delete keys {missing} are not columns of "
@@ -2526,7 +2516,7 @@ def zonemap_delete_by_key(
     keys = keys.select(bucket_col, *key_cols).distinct() \
         .localCheckpoint(eager=True)
 
-    def _commit(iid: int) -> dict:
+    def commit(_, iid: int) -> dict:
         kd = keys.withColumn("ingest", F.lit(int(iid)))
         write_partitioned(
             kd, fs_spark_path(f"{loc}/{EQ_DELETES_DIR}"),
@@ -2536,20 +2526,9 @@ def zonemap_delete_by_key(
         # — published AFTER the key files, so the commit point is the
         # delta rename (readers see neither half or both); built from
         # the readback of what actually landed (replay-exact)
-        eq_key = (loc, EQ_DELETES_DIR, "leaf", tuple(key_cols))
-        eq_schema = _DELTA_SCHEMA_CACHE.get(eq_key)
-        eq_reader = spark.read.option(
-            "basePath", fs_spark_path(f"{loc}/{EQ_DELETES_DIR}")
-        )
-        if eq_schema is not None:
-            eq_reader = eq_reader.schema(eq_schema)
-        eq_raw = eq_reader.parquet(fs_spark_path(
-            f"{loc}/{EQ_DELETES_DIR}/ingest={int(iid)}"
-        ))
-        if eq_schema is None:
-            _DELTA_SCHEMA_CACHE[eq_key] = eq_raw.schema
         eqc = (
-            eq_raw
+            _delete_leaves(spark, loc, EQ_DELETES_DIR,
+                           [f"ingest={int(iid)}"], key_cols)
             # manifest bucket values are STRINGS (partition-value
             # convention, same cast every delta writer applies)
             .groupBy(F.col(bucket_col).cast("string")
@@ -2564,42 +2543,21 @@ def zonemap_delete_by_key(
         )
         _record_eq_keys(loc, list(key_cols))
         _publish_delta(eqc, loc, int(iid), serde)
-        # totals from the publish-time observe() metrics when this
-        # process wrote the delta (r14) — one readback job otherwise
-        cached = _DELTA_TOTALS_CACHE.get((loc, "manifest", int(iid)))
-        if cached is not None and "n_eq_keys" in cached:
-            return {"n_keys_deleted": int(cached["n_eq_keys"] or 0),
-                    "n_buckets_affected": int(
-                        cached["n_delta_rows"] or 0),
-                    "ingest_id": int(iid)}
-        totals = _meta_row(
-            _delta_reader(
-                _meta_spark(spark), loc, "manifest",
-                SERDE_FORMATS.get(serde, serde), (int(iid),),
-                single=True, token=bucket_col,
-            )
-            .load(fs_spark_path(f"{loc}/manifest/ingest={int(iid)}"))
-            .agg(
+        obs = _observed_totals(loc, iid, "n_eq_keys")
+        if obs is not None:
+            n_keys, n_buckets = obs["n_eq_keys"], obs["n_delta_rows"]
+        else:
+            n_keys, n_buckets = _delta_row(
+                spark, loc, "manifest", serde, iid, bucket_col,
                 F.coalesce(F.sum("n_eq_keys"), F.lit(0)),
                 F.count(F.lit(1)),
             )
-        )
-        return {"n_keys_deleted": int(totals[0]),
-                "n_buckets_affected": int(totals[1]),
+        return {"n_keys_deleted": int(n_keys or 0),
+                "n_buckets_affected": int(n_buckets or 0),
                 "ingest_id": int(iid)}
 
-    if ingest_id is not None:
-        return _commit(int(ingest_id))
-    for _attempt in range(5):
-        base = _commit_snapshot(loc)
-        iid = _claim_ingest_id(loc)
-        if _commit_snapshot(loc) != base:
-            continue
-        return _commit(iid)
-    raise RuntimeError(
-        f"zonemap_delete_by_key on {loc}: commit validation failed 5 "
-        "times under concurrent writes — serialize writers"
-    )
+    return _optimistic_commit(loc, "zonemap_delete_by_key", commit,
+                              ingest_id=ingest_id)
 
 
 def zonemap_overwrite(
@@ -2631,8 +2589,9 @@ def zonemap_overwrite(
     descriptor wins and the arguments must not conflict (same rule as
     every append). The tombstone set is ``current buckets − df
     buckets`` — both metadata-sized collects, the same contract as
-    :func:`zonemap_merge`'s affected-bucket set. Single-writer, like
-    every mutation here.
+    :func:`zonemap_merge`'s affected-bucket set; the current set is
+    planned inside the commit protocol (module docstring), so a
+    bucket a concurrent append creates is tombstoned too.
 
     Returns {"n_rows", "n_buckets", "n_buckets_tombstoned",
     "ingest_id"}. Row/bucket counts come from the just-written
@@ -2641,8 +2600,6 @@ def zonemap_overwrite(
     data (an ``observe`` on ``df`` would double-count: the write
     evaluates the frame once for the data and once for the manifest
     aggregate)."""
-    from pyspark.sql import functions as F
-
     loc = location.rstrip("/")
     _recover_layout(loc)
     meta = _read_layout_meta(loc)
@@ -2659,7 +2616,6 @@ def zonemap_overwrite(
         n_r, n_b = _delta_totals(spark, loc, serde, bucket_col, 0)
         return {"n_rows": n_r, "n_buckets": n_b,
                 "n_buckets_tombstoned": 0, "ingest_id": 0}
-    bucket_col = meta["bucket_col"]
     if spec is not None:
         if (meta.get("spec") or []) != list(spec):
             raise ValueError(
@@ -2668,49 +2624,30 @@ def zonemap_overwrite(
             )
         if bucket_expr is None:
             bucket_expr = _spec_expr(list(spec))
-    if bucket_col not in df.columns:
-        # hidden partitioning: derive the clustering column from the
-        # recorded (or explicitly passed, drift-checked by the append)
-        # expression — the publish path's source table need not carry
-        # a materialized bucket column (VERDICT r11 ask #3)
-        derive = (bucket_expr if bucket_expr is not None
-                  else meta.get("bucket_expr"))
-        if not derive:
-            raise ValueError(
-                f"overwrite must carry the clustering column "
-                f"{bucket_col!r} (or the layout must record a "
-                "bucket_expr to derive it)"
-            )
-        df = df.withColumn(bucket_col, F.expr(derive))
+    # hidden partitioning: the publish path's source table need not
+    # carry a materialized bucket column (VERDICT r11 ask #3); an
+    # explicitly passed expression is drift-checked by the append
+    bucket_col, df = _with_clustering(df, meta, "overwrite", bucket_expr)
     df = df.localCheckpoint(eager=True)  # same pin as zonemap_merge
-    new_buckets = {
-        str(r[0])
-        for r in df.select(
-            F.col(bucket_col).cast("string")
-        ).distinct().collect()
-    }
-    for _attempt in range(5):
-        base = _commit_snapshot(loc)
+    new_buckets = {str(b) for b in _bucket_values(df, bucket_col)}
+
+    def plan():
         _, kept, _ = zonemap_plan(spark, loc, serde=meta["serde"])
-        gone = sorted({str(r[bucket_col]) for r in kept} - new_buckets)
-        ingest_id = _claim_ingest_id(loc)
-        if _commit_snapshot(loc) != base:
-            continue  # a commit landed since planning: recompute
+        return sorted({str(r[bucket_col]) for r in kept} - new_buckets)
+
+    def commit(gone, ingest_id):
         append_zonemapped(
             df, loc, bucket_col, meta["stat_cols"], serde=meta["serde"],
             bloom_cols=meta["bloom_cols"] or None, ingest_id=ingest_id,
             ndv_cols=ndv_cols, bucket_expr=bucket_expr,
             _replaces=True, _tombstone_buckets=gone or None,
         )
-        break
-    else:
-        raise RuntimeError(
-            f"zonemap_overwrite on {loc}: commit validation failed 5 "
-            "times under concurrent writes — serialize writers"
-        )
-    n_r, _ = _delta_totals(spark, loc, meta["serde"], bucket_col, ingest_id)
-    return {"n_rows": n_r, "n_buckets": len(new_buckets),
-            "n_buckets_tombstoned": len(gone), "ingest_id": ingest_id}
+        n_r, _ = _delta_totals(spark, loc, meta["serde"], bucket_col,
+                               ingest_id)
+        return {"n_rows": n_r, "n_buckets": len(new_buckets),
+                "n_buckets_tombstoned": len(gone), "ingest_id": ingest_id}
+
+    return _optimistic_commit(loc, "zonemap_overwrite", commit, plan)
 
 
 def zonemap_replace_buckets(
@@ -2728,35 +2665,16 @@ def zonemap_replace_buckets(
     partition-overwrite shape on the clustering dimension — the
     primitive an INCREMENTAL replication publish rewrites one changed
     bucket with, instead of re-publishing a 100 TB snapshot. Same
-    append-only/time-travel properties and optimistic-concurrency
-    contract as :func:`zonemap_merge`.
+    append-only/time-travel properties as :func:`zonemap_merge`;
+    commits through the commit protocol (module docstring).
 
     Returns {"n_rows", "n_buckets_written", "n_buckets_tombstoned",
     "ingest_id"}."""
-    from pyspark.sql import functions as F
-
-    loc = location.rstrip("/")
-    _recover_layout(loc)
-    meta = _read_layout_meta(loc)
-    if meta is None:
-        raise ValueError(f"{loc} has no {LAYOUT_META}; replace_buckets "
-                         "needs a descriptor-bearing layout")
-    bucket_col = meta["bucket_col"]
-    if bucket_col not in df.columns:
-        if not meta.get("bucket_expr"):
-            raise ValueError(
-                f"df must carry the clustering column {bucket_col!r} "
-                "(or the layout must record a bucket_expr)"
-            )
-        df = df.withColumn(bucket_col, F.expr(meta["bucket_expr"]))
+    loc, meta = _open_layout(location, "replace_buckets")
+    bucket_col, df = _with_clustering(df, meta, "df")
     df = df.localCheckpoint(eager=True)  # same pin as zonemap_merge
     listed = {str(b) for b in buckets}
-    present = {
-        str(r[0])
-        for r in df.select(
-            F.col(bucket_col).cast("string")
-        ).distinct().collect()
-    }
+    present = {str(b) for b in _bucket_values(df, bucket_col)}
     stray = sorted(present - listed)
     if stray:
         raise ValueError(
@@ -2766,26 +2684,45 @@ def zonemap_replace_buckets(
             "filter the frame"
         )
     gone = sorted(listed - present)
-    for _attempt in range(5):
-        base = _commit_snapshot(loc)
-        ingest_id = _claim_ingest_id(loc)
-        if _commit_snapshot(loc) != base:
-            continue
+
+    def commit(_, ingest_id):
         append_zonemapped(
             df, loc, bucket_col, meta["stat_cols"], serde=meta["serde"],
             bloom_cols=meta["bloom_cols"] or None, ingest_id=ingest_id,
             _replaces=True, _tombstone_buckets=gone or None,
         )
-        break
-    else:
-        raise RuntimeError(
-            f"zonemap_replace_buckets on {loc}: commit validation "
-            "failed 5 times under concurrent writes — serialize writers"
-        )
-    n_r, n_b = _delta_totals(spark, loc, meta["serde"], bucket_col,
-                             ingest_id)
-    return {"n_rows": n_r, "n_buckets_written": n_b,
-            "n_buckets_tombstoned": len(gone), "ingest_id": ingest_id}
+        n_r, n_b = _delta_totals(spark, loc, meta["serde"], bucket_col,
+                                 ingest_id)
+        return {"n_rows": n_r, "n_buckets_written": n_b,
+                "n_buckets_tombstoned": len(gone), "ingest_id": ingest_id}
+
+    return _optimistic_commit(loc, "zonemap_replace_buckets", commit)
+
+
+def _observed_totals(loc: str, ingest_id: int,
+                     metric: str = "n_rows") -> dict | None:
+    """The publish-time ``observe()`` metrics of manifest delta
+    ``ingest_id`` (r14) when this process wrote it and they carry
+    ``metric`` — None sends the caller to :func:`_delta_row`."""
+    obs = _DELTA_TOTALS_CACHE.get((loc, "manifest", int(ingest_id)))
+    return obs if obs is not None and metric in obs else None
+
+
+def _delta_row(spark: SparkSession, loc: str, subdir: str, serde: str,
+               ingest_id: int, token, *aggs, where=None):
+    """One aggregate row over ONE published delta — the committer's
+    metadata-sized readback: built on the metadata session, schema
+    from the delta cache, one Spark job."""
+    from reair_spark.fs import fs_spark_path
+
+    iid = int(ingest_id)
+    df = _delta_reader(
+        _meta_spark(spark), loc, subdir, SERDE_FORMATS.get(serde, serde),
+        (iid,), single=True, token=token,
+    ).load(fs_spark_path(f"{loc}/{subdir}/ingest={iid}"))
+    if where is not None:
+        df = df.where(where)
+    return _meta_row(df.agg(*aggs))
 
 
 def _delta_totals(
@@ -2793,29 +2730,19 @@ def _delta_totals(
     ingest_id: int,
 ) -> tuple[int, int]:
     """(rows written, non-empty buckets) of ONE manifest delta —
-    tombstone rows (n_rows=0) excluded. Metadata-sized. Answered from
-    the publish-time observe() metrics when this process wrote the
-    delta (r14) — the readback job below is the fallback for deltas
-    committed elsewhere."""
+    tombstone rows (n_rows=0) excluded. Metadata-sized: the publish-
+    time metrics when this process wrote the delta, else one
+    readback job (deltas committed elsewhere)."""
     from pyspark.sql import functions as F
 
-    from reair_spark.fs import fs_spark_path
-
-    cached = _DELTA_TOTALS_CACHE.get((loc, "manifest", int(ingest_id)))
-    if cached is not None:
-        return int(cached["n_rows"] or 0), int(cached["n_buckets"] or 0)
-    fmt = SERDE_FORMATS.get(serde, serde)
-    r = _meta_row(
-        _delta_reader(
-            _meta_spark(spark), loc, "manifest", fmt,
-            (int(ingest_id),), single=True, token=bucket_col,
-        )
-        .load(fs_spark_path(f"{loc}/manifest/ingest={int(ingest_id)}"))
-        .where(F.col("n_rows") > 0)
-        .agg(
-            F.coalesce(F.sum("n_rows"), F.lit(0)),
-            F.countDistinct(F.col(bucket_col).cast("string")),
-        )
+    obs = _observed_totals(loc, ingest_id)
+    if obs is not None:
+        return int(obs["n_rows"] or 0), int(obs["n_buckets"] or 0)
+    r = _delta_row(
+        spark, loc, "manifest", serde, ingest_id, bucket_col,
+        F.coalesce(F.sum("n_rows"), F.lit(0)),
+        F.countDistinct(F.col(bucket_col).cast("string")),
+        where=F.col("n_rows") > 0,
     )
     return int(r[0]), int(r[1])
 
@@ -2862,28 +2789,23 @@ def zonemap_delete(
     directories / delete files.
 
     Single-pass accounting (cow): the affected buckets are read ONCE —
-    the survivors write carries an ``observe`` counter and
-    ``n_rows_deleted`` is the manifest's row total for those buckets
-    minus the observed survivors. (mor): the delete files themselves
-    are the accounting — one pass over the pruned buckets writes them,
-    and the metadata-sized readback that builds the accounting delta
-    is the row count. Same optimistic-concurrency contract as
-    :func:`zonemap_merge` (claimed ingest id, commit validation with
-    recompute-retry) — validated against BOTH delta trees, so a
-    concurrent MOR delete forces a COW rewrite to recompute instead of
-    silently resurrecting its rows.
+    the survivors write carries an ``observe`` counter of the matched
+    rows. (mor): the delete files themselves are the accounting — one
+    pass over the pruned buckets writes them, and the metadata-sized
+    readback that builds the accounting delta is the row count. Both
+    modes commit through the commit protocol (module docstring),
+    validated against BOTH delta trees: the affected-bucket set is
+    planned per attempt, so rows a concurrent append lands in any
+    bucket are judged by the predicate too, and a concurrent MOR
+    delete forces a COW rewrite to recompute instead of silently
+    resurrecting its rows.
 
     Returns {"n_buckets_affected", "n_rows_deleted", "ingest_id"}."""
     from pyspark.sql import functions as F
 
     if mode not in ("cow", "mor"):
         raise ValueError(f"unknown delete mode {mode!r}: cow or mor")
-    loc = location.rstrip("/")
-    _recover_layout(loc)
-    meta = _read_layout_meta(loc)
-    if meta is None:
-        raise ValueError(f"{loc} has no {LAYOUT_META}; delete needs a "
-                         "descriptor-bearing layout")
+    loc, meta = _open_layout(location, "delete")
     bucket_col = meta["bucket_col"]
     # exact row-level predicate (the residual): delete rows matching
     # EVERY range and EVERY point predicate
@@ -2902,54 +2824,45 @@ def zonemap_delete(
         return _zonemap_delete_mor(
             spark, loc, meta, cond, predicates, point_predicates
         )
-    doomed_scope, _ = zonemap_scan(
-        spark, loc, predicates=predicates, serde=meta["serde"],
-        point_predicates=point_predicates,
-    )
-    affected = [
-        r[0]
-        for r in doomed_scope.select(
-            F.col(bucket_col).cast("string")
-        ).where(cond).distinct().collect()
-    ]
-    if not affected:
-        return {"n_buckets_affected": 0, "n_rows_deleted": 0,
-                "ingest_id": None}
     from pyspark.sql import Observation
 
-    for _attempt in range(5):
-        base = _commit_snapshot(loc)
+    def plan():
+        doomed_scope, _ = zonemap_scan(
+            spark, loc, predicates=predicates, serde=meta["serde"],
+            point_predicates=point_predicates,
+        )
+        affected = _bucket_values(doomed_scope.where(cond), bucket_col)
+        if not affected:
+            return None
         existing, _ = zonemap_scan(
             spark, loc, serde=meta["serde"], buckets=affected
         )
-        existing = existing.drop("ingest")
         # the matched-row count is OBSERVED on the same single pass
         # that writes the survivors (not derived from manifest
         # arithmetic, which is gross of equality masks): exact under
         # every read-time mask, still one pass over the affected data
         obs = Observation()
-        survivors = existing.observe(
+        survivors = existing.drop("ingest").observe(
             obs, F.coalesce(F.sum(cond.cast("long")), F.lit(0))
             .alias("n_deleted")
         ).where(~cond)
-        ingest_id = _claim_ingest_id(loc)
-        if _commit_snapshot(loc) != base:
-            continue  # a commit landed since planning: recompute
+        return affected, survivors, obs
+
+    def commit(planned, ingest_id):
+        affected, survivors, obs = planned
         append_zonemapped(
             survivors, loc, bucket_col, meta["stat_cols"],
             serde=meta["serde"], bloom_cols=meta["bloom_cols"] or None,
             ingest_id=ingest_id, _replaces=True,
             _tombstone_buckets=affected,
         )
-        break
-    else:
-        raise RuntimeError(
-            f"zonemap_delete on {loc}: commit validation failed 5 "
-            "times under concurrent writes — serialize writers"
-        )
-    return {"n_buckets_affected": len(affected),
-            "n_rows_deleted": int(obs.get["n_deleted"]),
-            "ingest_id": ingest_id}
+        return {"n_buckets_affected": len(affected),
+                "n_rows_deleted": int(obs.get["n_deleted"]),
+                "ingest_id": ingest_id}
+
+    return _optimistic_commit(loc, "zonemap_delete", commit, plan) or {
+        "n_buckets_affected": 0, "n_rows_deleted": 0, "ingest_id": None,
+    }
 
 
 def _zonemap_delete_mor(
@@ -2982,8 +2895,8 @@ def _zonemap_delete_mor(
         )
     bucket_col = meta["bucket_col"]
     fs = fs_for(loc)
-    for _attempt in range(5):
-        base = _commit_snapshot(loc)
+
+    def plan():
         bcol, kept, _ = zonemap_plan(
             spark, loc, predicates=predicates, serde=serde,
             point_predicates=point_predicates,
@@ -2991,15 +2904,14 @@ def _zonemap_delete_mor(
         scoped = _bucket_reader(
             spark, loc, serde, kept, bcol, with_rowrefs=True
         )
-        matched = scoped.where(cond).select(
+        return scoped.where(cond).select(
             F.col(bucket_col).cast("string").alias(bucket_col),
             F.col("ingest").cast("int").alias("data_ingest"),
             "__file",
             F.col("__pos").cast("long").alias("__pos"),
         )
-        ingest_id = _claim_ingest_id(loc)
-        if _commit_snapshot(loc) != base:
-            continue  # a commit landed since planning: recompute
+
+    def commit(matched, ingest_id):
         # delete files land like any ingest: dynamic partition
         # overwrite keyed by the claimed id (idempotent re-run)
         # cluster the delete addresses by bucket before the write:
@@ -3049,27 +2961,18 @@ def _zonemap_delete_mor(
                        subdir=DMANIFEST_DIR)
         # totals from the just-published accounting delta (r14):
         # aggregating acc would re-read + re-group the delete files;
-        # the delta IS acc's rows, metadata-sized, and reading it on
-        # the metadata session keeps the narrow conf off the shared
-        # session
-        totals = _meta_row(
-            _delta_reader(
-                _meta_spark(spark), loc, DMANIFEST_DIR, "parquet",
-                (int(ingest_id),), single=True, token=bucket_col,
-            ).load(fs_spark_path(
-                f"{loc}/{DMANIFEST_DIR}/ingest={int(ingest_id)}"
-            )).agg(
-                F.coalesce(F.sum("n_deletes"), F.lit(0)),
-                F.countDistinct(bucket_col),
-            )
+        # the delta IS acc's rows, metadata-sized
+        totals = _delta_row(
+            spark, loc, DMANIFEST_DIR, "parquet", ingest_id, bucket_col,
+            F.coalesce(F.sum("n_deletes"), F.lit(0)),
+            F.countDistinct(bucket_col),
         )
         return {"n_buckets_affected": int(totals[1]),
                 "n_rows_deleted": int(totals[0]),
                 "ingest_id": int(ingest_id)}
-    raise RuntimeError(
-        f"zonemap_delete(mode='mor') on {loc}: commit validation "
-        "failed 5 times under concurrent writes — serialize writers"
-    )
+
+    return _optimistic_commit(loc, "zonemap_delete(mode='mor')", commit,
+                              plan)
 
 
 def zonemap_vacuum(
@@ -3125,12 +3028,7 @@ def zonemap_vacuum(
 
     if retention_ingests < 0:
         raise ValueError("retention_ingests must be >= 0")
-    loc = location.rstrip("/")
-    _recover_layout(loc)
-    meta = _read_layout_meta(loc)
-    if meta is None:
-        raise ValueError(f"{loc} has no {LAYOUT_META}; vacuum needs a "
-                         "descriptor-bearing layout")
+    loc, meta = _open_layout(location, "vacuum")
     with _LayoutWriterLease(loc, "vacuum"):
         serde = meta["serde"]
         fmt = SERDE_FORMATS.get(serde, serde)
@@ -3270,16 +3168,13 @@ def zonemap_vacuum(
                     ref.alias("__i"),
                 ).distinct().collect()
             }
-            for e in _scandir_or_empty(fs, f"{loc}/data"):
-                if not (e.is_dir and e.name.startswith("ingest=")
-                        and e.name.split("=", 1)[1].isdigit()):
-                    continue
-                i = int(e.name.split("=", 1)[1])
+            for i in _delta_ids(loc, "data"):
                 if i > int(ft):
                     # above the fold, pending appends/replays may still
                     # publish a delta for the dir — not sweepable here
                     continue
-                for b in _scandir_or_empty(fs, e.path):
+                idir = f"{loc}/data/ingest={i}"
+                for b in _scandir_or_empty(fs, idir):
                     if not (b.is_dir and "=" in b.name):
                         continue
                     raw_val = _unescape_partition_value(
@@ -3288,8 +3183,8 @@ def zonemap_vacuum(
                     if (i, raw_val) not in live:
                         fs_rmtree(fs, b.path)
                         removed += 1
-                if not _scandir_or_empty(fs, e.path):
-                    fs_rmtree(fs, e.path)
+                if not _scandir_or_empty(fs, idir):
+                    fs_rmtree(fs, idir)
                     swept += 1
         # merge-on-read residue: DV / equality-delete deltas whose
         # EVERY touched bucket was later rewritten by a replacing
@@ -3364,12 +3259,7 @@ def zonemap_vacuum(
                         F.explode("eq_ingests").alias("__d"),
                     )
                 )
-            live_eq_dirs = {
-                int(e.name.split("=", 1)[1])
-                for e in _scandir_or_empty(fs, f"{loc}/{EQ_DELETES_DIR}")
-                if e.name.startswith("ingest=")
-                and e.name.split("=", 1)[1].isdigit()
-            }
+            live_eq_dirs = set(_delta_ids(loc, EQ_DELETES_DIR))
             for d in _dead_mask_ids(eq_pairs.distinct()):
                 if d in live_eq_dirs:
                     fs_rmtree(fs, f"{loc}/{EQ_DELETES_DIR}/ingest={d}")
@@ -3597,13 +3487,50 @@ def _delta_reader(
             if single and not base_path
             else (base_path or fs_spark_path(f"{loc}/{subdir}"))
         ).schema
-        if len(_DELTA_SCHEMA_CACHE) > 4096:
-            _DELTA_SCHEMA_CACHE.clear()
-        _DELTA_SCHEMA_CACHE[key] = schema
+        _cache_schema(key, schema)
     out = spark.read.format(fmt).schema(schema)
     if base_path:
         out = out.option("basePath", base_path)
     return out
+
+
+def _cache_schema(key: tuple, schema) -> None:
+    """Store one inferred schema under the cache's 4,096-entry bound
+    (cleared wholesale past it: entries are cheap to re-infer)."""
+    if len(_DELTA_SCHEMA_CACHE) > 4096:
+        _DELTA_SCHEMA_CACHE.clear()
+    _DELTA_SCHEMA_CACHE[key] = schema
+
+
+def _delete_leaves(
+    spark: SparkSession, loc: str, subdir: str, rels: list[str],
+    key_cols: list[str] | None = None,
+) -> DataFrame:
+    """Parquet frame over directories of a delete tree, given relative
+    to ``<loc>/<subdir>``: DV positions (``deletes``), or equality
+    keys (``edeletes``) when ``key_cols`` is given — those are read
+    from the tree root (basePath) so ``ingest`` and the clustering
+    column come back as columns. Delete-file schemas are writer-
+    constant per layout (per key set for equality deletes), so the
+    cache key carries no ids: repeat reads skip the per-load
+    schema-inference job (r14)."""
+    from reair_spark.fs import fs_spark_path
+
+    reader = spark.read
+    key: tuple = (loc, subdir, "leaf")
+    if key_cols is not None:
+        key += (tuple(key_cols),)
+        reader = reader.option(
+            "basePath", fs_spark_path(f"{loc}/{subdir}")
+        )
+    schema = _DELTA_SCHEMA_CACHE.get(key)
+    if schema is not None:
+        reader = reader.schema(schema)
+    df = reader.parquet(*[fs_spark_path(f"{loc}/{subdir}/{r}")
+                          for r in rels])
+    if schema is None:
+        _cache_schema(key, df.schema)
+    return df
 
 
 def zonemap_plan(
@@ -4158,10 +4085,8 @@ def zonemap_stats(
     portable md5 hash, which is what makes it oracle-checkable."""
     from pyspark.sql import functions as F
 
-    meta = _read_layout_meta(location.rstrip("/"))
-    if meta is None:
-        raise ValueError(f"{location} has no {LAYOUT_META}; stats need "
-                         "a descriptor-bearing layout")
+    # no recovery here: _merged_manifest runs it before reading
+    meta = _require_meta(location.rstrip("/"), "stats")
     # metadata session: the merged view is only aggregated + collected
     _, man = _merged_manifest(
         _meta_spark(spark), location, meta["serde"], max_ingest
@@ -4458,10 +4383,7 @@ def zonemap_changes(
     # can't enter the feed through a staged list that predates it
     pinned_man = _manifest_delta_ids(loc)
     pinned_dv = _dmanifest_delta_ids(loc)
-    meta = _read_layout_meta(loc)
-    if meta is None:
-        raise ValueError(f"{loc} has no {LAYOUT_META}; the change feed "
-                         "needs a descriptor-bearing layout")
+    meta = _require_meta(loc, "the change feed")
     serde = meta["serde"]
     fmt = SERDE_FORMATS.get(serde, serde)
     floor = max(
@@ -4536,23 +4458,10 @@ def zonemap_changes(
                                       buckets=eq_buckets,
                                       max_ingest=i - 1)
                 old = old.drop("ingest")
-                eq_key = (loc, EQ_DELETES_DIR, "leaf", tuple(key_cols))
-                eq_schema = _DELTA_SCHEMA_CACHE.get(eq_key)
-                eq_reader = spark.read.option(
-                    "basePath",
-                    fs_spark_path(f"{loc}/{EQ_DELETES_DIR}"),
-                )
-                if eq_schema is not None:
-                    eq_reader = eq_reader.schema(eq_schema)
-                eq_raw = eq_reader.parquet(*[
-                    fs_spark_path(
-                        f"{loc}/{EQ_DELETES_DIR}/ingest={i}"
-                        f"/{bucket_col}={_escape_partition_value(b)}"
-                    ) for b in eq_buckets
-                ])
-                if eq_schema is None:
-                    _DELTA_SCHEMA_CACHE[eq_key] = eq_raw.schema
-                eqk = eq_raw.select(*key_cols)
+                eqk = _delete_leaves(spark, loc, EQ_DELETES_DIR, [
+                    f"ingest={i}/{bucket_col}={_escape_partition_value(b)}"
+                    for b in eq_buckets
+                ], key_cols).select(*key_cols)
                 pieces.append(_stamp(
                     old.join(eqk, key_cols, "left_semi"), "delete", i
                 ))
@@ -4609,11 +4518,9 @@ def zonemap_changes(
                 for b, ing in by_bucket.items()]
         target = _bucket_reader(spark, loc, serde, kept, bucket_col,
                                 with_rowrefs=True)
-        dv = spark.read.parquet(*[
-            fs_spark_path(
-                f"{loc}/{DELETES_DIR}/ingest={i}"
-                f"/{bucket_col}={_escape_partition_value(b)}"
-            ) for b in by_bucket
+        dv = _delete_leaves(spark, loc, DELETES_DIR, [
+            f"ingest={i}/{bucket_col}={_escape_partition_value(b)}"
+            for b in by_bucket
         ]).select("__file", "__pos")
         if sum(int(r["n_deletes"]) for r in pairs) \
                 <= DV_BROADCAST_MAX_ROWS:
@@ -4747,11 +4654,7 @@ def zonemap_tag(
     commit — drop the tag first (:func:`zonemap_drop_tag`). Published
     through the descriptor CAS, so concurrent taggers serialize.
     Returns the tagged ingest id."""
-    loc = location.rstrip("/")
-    _recover_layout(loc)
-    if _read_layout_meta(loc) is None:
-        raise ValueError(f"{loc} has no {LAYOUT_META}; tags need a "
-                         "descriptor-bearing layout")
+    loc, _ = _open_layout(location, "tags")
     committed = set()
     for ids in _commit_snapshot(loc):
         committed.update(ids)
@@ -5140,12 +5043,7 @@ def zonemap_rollback(
     "removed_ingests"}."""
     from reair_spark.fs import fs_for, fs_rmtree
 
-    loc = location.rstrip("/")
-    _recover_layout(loc)
-    meta = _read_layout_meta(loc)
-    if meta is None:
-        raise ValueError(f"{loc} has no {LAYOUT_META}; rollback needs "
-                         "a descriptor-bearing layout")
+    loc, meta = _open_layout(location, "rollback")
     to_ingest = int(to_ingest)
     with _LayoutWriterLease(loc, "rollback"):
         # guards evaluate on a descriptor read INSIDE the lease: a
@@ -5298,24 +5196,10 @@ def _bucket_reader(
         # after any join, _metadata is no longer resolvable
         df = _attach_rowrefs(df)
     if dv_pairs:
-        dv_paths = [
-            fs_spark_path(
-                f"{loc}/{DELETES_DIR}/ingest={i}"
-                f"/{bucket_col}={_escape_partition_value(b)}"
-            )
+        dv = _delete_leaves(spark, loc, DELETES_DIR, [
+            f"ingest={i}/{bucket_col}={_escape_partition_value(b)}"
             for i, b in dv_pairs
-        ]
-        # DV file schema is writer-constant per layout; cache it so
-        # repeat scans skip the per-load inference job (r14)
-        dv_key = (loc, DELETES_DIR, "leaf")
-        dv_schema = _DELTA_SCHEMA_CACHE.get(dv_key)
-        dv_reader = spark.read
-        if dv_schema is not None:
-            dv_reader = dv_reader.schema(dv_schema)
-        dv = dv_reader.parquet(*dv_paths)
-        if dv_schema is None:
-            _DELTA_SCHEMA_CACHE[dv_key] = dv.schema
-        dv = dv.select("__file", "__pos")
+        ]).select("__file", "__pos")
         if sum(int(r.get("__dv_rows") or 0) for r in kept) \
                 <= DV_BROADCAST_MAX_ROWS:
             dv = F.broadcast(dv)
@@ -5334,27 +5218,11 @@ def _bucket_reader(
                 f"layout {loc} has live equality deletes but records "
                 "no eq_key_cols — descriptor corrupt"
             )
-        eq_paths = [
-            fs_spark_path(
-                f"{loc}/{EQ_DELETES_DIR}/ingest={i}"
-                f"/{bucket_col}={_escape_partition_value(b)}"
-            )
-            for i, b in eq_pairs
-        ]
-        # eq-delete file schema is pinned by the layout's recorded
-        # eq_key_cols; cache it to skip per-scan inference jobs (r14)
-        eq_key = (loc, EQ_DELETES_DIR, "leaf", tuple(key_cols))
-        eq_schema = _DELTA_SCHEMA_CACHE.get(eq_key)
-        eq_reader = spark.read.option(
-            "basePath", fs_spark_path(f"{loc}/{EQ_DELETES_DIR}")
-        )
-        if eq_schema is not None:
-            eq_reader = eq_reader.schema(eq_schema)
-        eq_raw = eq_reader.parquet(*eq_paths)
-        if eq_schema is None:
-            _DELTA_SCHEMA_CACHE[eq_key] = eq_raw.schema
         eqm = (
-            eq_raw
+            _delete_leaves(spark, loc, EQ_DELETES_DIR, [
+                f"ingest={i}/{bucket_col}={_escape_partition_value(b)}"
+                for i, b in eq_pairs
+            ], key_cols)
             .groupBy(*key_cols)
             .agg(F.max("ingest").alias("__eq_max"))
         )

@@ -20,6 +20,7 @@ from reair_spark.fs import (
     register_fs,
     unregister_fs,
 )
+from reair_spark.io import rows_df
 
 
 def _base_layout(spark, loc):
@@ -211,6 +212,129 @@ def test_interleaved_delete_recomputes(spark, tmp_path, monkeypatch):
     df, _ = S.zonemap_scan(spark, loc)
     assert df.where("v = 5").count() == 0
     assert df.count() == 39
+
+
+def _rows(spark, ks, b, v=None):
+    """(k, b, v) rows of one bucket; ``v`` defaults to the key."""
+    return rows_df(spark, [(k, b, k if v is None else v) for k in ks],
+                   "k long, b long, v long")
+
+
+def _race_append(monkeypatch, loc, rows):
+    """Patch the id claim so an append of ``rows`` commits once, in the
+    window between a mutator's planning and its own claim."""
+    state = {"fired": False}
+    real_claim = S._claim_ingest_id
+
+    def claim_with_concurrent_append(location):
+        if not state["fired"]:
+            state["fired"] = True
+            S.append_zonemapped(rows, loc, "b", ["v"],
+                                ingest_id=real_claim(location))
+        return real_claim(location)
+
+    monkeypatch.setattr(S, "_claim_ingest_id", claim_with_concurrent_append)
+
+
+def test_interleaved_delete_replans_affected_buckets(
+    spark, tmp_path, monkeypatch
+):
+    """The matching rows land in bucket 2, which held no ``v = 5`` row
+    when the delete first planned: the retry must re-plan the affected
+    bucket set, not only re-read the buckets planned before the race
+    (which left both appended rows alive and counted 1 deletion)."""
+    loc = str(tmp_path / "racedel2")
+    _base_layout(spark, loc)
+    _race_append(monkeypatch, loc, _rows(spark, [200, 201], 2, v=5))
+    res = S.zonemap_delete(spark, loc, predicates=[("v", 5, 5)])
+    monkeypatch.undo()
+
+    assert res["n_rows_deleted"] == 3
+    df, _ = S.zonemap_scan(spark, loc)
+    vs = [r.v for r in df.select("v").collect()]
+    assert 5 not in vs and len(vs) == 39
+
+
+def test_interleaved_upsert_keys_win(spark, tmp_path, monkeypatch):
+    """An append of an older version of key 5 (and a new key 100)
+    commits mid-upsert: the upsert validates, re-claims ABOVE it, and
+    its equality mask supersedes the appended version."""
+    loc = str(tmp_path / "raceups")
+    _base_layout(spark, loc)
+    _race_append(monkeypatch, loc, _rows(spark, [5, 100], 1, v=-1))
+    res = S.zonemap_upsert_mor(spark, loc, _rows(spark, [5], 1, v=7777),
+                               key_cols=["k"])
+    monkeypatch.undo()
+
+    df, _ = S.zonemap_scan(spark, loc)
+    got = [(r.k, r.v) for r in df.collect()]
+    assert [v for k, v in got if k == 5] == [7777]   # the upsert wins
+    assert (100, -1) in got                         # the append lands
+    assert len(got) == 41
+    assert res["n_keys_masked"] == 1
+
+
+def test_interleaved_delete_by_key_masks_appended_rows(
+    spark, tmp_path, monkeypatch
+):
+    """Rows of a deleted key appended mid-delete are masked too: the
+    delete commits above the append, so its mask covers every prior
+    version of the key."""
+    loc = str(tmp_path / "racedbk")
+    _base_layout(spark, loc)
+    _race_append(monkeypatch, loc, _rows(spark, [7, 300], 3))
+    res = S.zonemap_delete_by_key(
+        spark, loc, rows_df(spark, [(7, 3)], "k long, b long"),
+        key_cols=["k"],
+    )
+    monkeypatch.undo()
+
+    df, _ = S.zonemap_scan(spark, loc)
+    keys = [r.k for r in df.collect()]
+    assert 7 not in keys
+    assert 300 in keys and len(keys) == 40
+    assert res["n_keys_deleted"] == 1
+
+
+def test_interleaved_overwrite_tombstones_appended_bucket(
+    spark, tmp_path, monkeypatch
+):
+    """A bucket created by an append that commits mid-overwrite is
+    absent from the new snapshot: the overwrite re-plans its tombstone
+    set from the layout as it is at commit time."""
+    loc = str(tmp_path / "raceow")
+    _base_layout(spark, loc)
+    _race_append(monkeypatch, loc, _rows(spark, [900, 901], 9))
+    res = S.zonemap_overwrite(
+        spark, loc, _rows(spark, [0, 1, 4, 5], 0)
+    )
+    monkeypatch.undo()
+
+    df, _ = S.zonemap_scan(spark, loc)
+    assert sorted(r.k for r in df.collect()) == [0, 1, 4, 5]
+    assert res["n_buckets_tombstoned"] == 4  # buckets 1, 2, 3 and 9
+
+
+def test_interleaved_replace_keeps_unlisted_bucket(
+    spark, tmp_path, monkeypatch
+):
+    """An append mid-replace into a listed bucket (1) and an unlisted
+    new one (9): the replace supersedes the listed bucket's rows,
+    appended ones included, and leaves the unlisted bucket alone."""
+    loc = str(tmp_path / "racerb")
+    _base_layout(spark, loc)
+    _race_append(monkeypatch, loc, _rows(spark, [500], 1)
+                 .unionByName(_rows(spark, [901], 9)))
+    S.zonemap_replace_buckets(spark, loc, _rows(spark, [1001], 1), [1])
+    monkeypatch.undo()
+
+    df, _ = S.zonemap_scan(spark, loc)
+    by_bucket = {}
+    for r in df.collect():
+        by_bucket.setdefault(r.b, set()).add(r.k)
+    assert by_bucket[1] == {1001}
+    assert by_bucket[9] == {901}
+    assert sum(len(v) for v in by_bucket.values()) == 32
 
 
 # ---------------------------------------------------------------------

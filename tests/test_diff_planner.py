@@ -100,6 +100,20 @@ def test_data_drift_copies_data(spark, tdf):
     assert not r.update_metadata and r.update_data
 
 
+def test_missing_dest_data_is_restored(spark, tdf):
+    """Equal metadata, source files present, destination location with
+    no digest (missing or empty dir): the data comparison must read
+    unequal, not NULL — a NULL fell through the ladder to a COPY whose
+    update_data was false, so the destination data was never
+    restored."""
+    src, dest = _table(), _table(loc="/dest/db1/t1")
+    dg = _digest(spark, {"/src/db1/t1": (3, 30, 333)})
+    r = _one(table_diff(tdf([src]), tdf([dest]), dg, dg))
+    assert (r.action, r.update_metadata, r.update_data) == (
+        "COPY_UNPARTITIONED_TABLE", False, True
+    )
+
+
 def test_schema_change_detected(spark, tdf):
     """schemasMatch (ReplicationUtils.java:139-142): col drift = drift."""
     src = _table(cols=(("c1", "string", None), ("c2", "bigint", None)))
